@@ -48,11 +48,11 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
 
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // Pass-interleaved protocol: one warmup pass over every query, then 2
+    // Pass-interleaved protocol: one warmup pass over every query, then 3
     // measured passes over every query, min per query. Host-contention
     // windows on this shared VM last minutes — back-to-back runs of one
     // query land in the SAME window and its min is still polluted, while
-    // interleaved passes measure each query at two well-separated times.
+    // interleaved passes measure each query at three well-separated times.
     // clearCache() before every measured run keeps each run paying its
     // own operator-internal materializations (r1 advice); the GC absorbs
     // freed cache blocks outside the next measurement.

@@ -42,7 +42,11 @@ private[graft] object Par {
   def await[A](f: scala.concurrent.Future[A]): A =
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
-  /** Await every leg, failing fast on the FIRST completed failure. */
+  /** Await every leg in argument order, rethrowing the first failure in
+    * that order: a failed leg surfaces only after every leg listed
+    * before it has completed, and the legs after it are not awaited
+    * (they keep running).
+    */
   def awaitAll(fs: scala.concurrent.Future[_]*): Unit =
     fs.foreach(await(_))
 }

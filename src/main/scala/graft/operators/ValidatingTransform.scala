@@ -28,6 +28,16 @@ object ValidatingTransform {
     * model). Output: normalized valid rows (nombre capitalized, ciudad
     * title-cased, edad int) and rejected rows carrying input columns +
     * `motivo` (reference scr/etl_batch.py:72-79 dynamic reject schema).
+    */
+  def apply(raw: DataFrame, minAge: Int = 25, batchReasons: Boolean = false): Result = {
+    val routed = route(raw, minAge, batchReasons)
+    Result(valid(routed), rejected(routed))
+  }
+
+  /** The input columns plus `motivo`, the first-failing reject reason
+    * (null on a valid row). [[valid]] and [[rejected]] derive from any
+    * frame of this shape, so a caller may materialize it once and split
+    * the materialized copy without re-running the chain.
     *
     * The reference carries two reason vocabularies: the relational
     * scripts distinguish null / cast failures ("Valor None en campo
@@ -36,27 +46,12 @@ object ValidatingTransform {
     * "Normalización o tipo inválido" (scr/etl_batch.py:58-62).
     * `batchReasons = true` selects the latter; routing is identical.
     */
-  def apply(raw: DataFrame, minAge: Int = 25, batchReasons: Boolean = false): Result = {
-    val inputCols = raw.columns.toSeq
-    val missing = RequiredColumns -- inputCols.map(_.toLowerCase).toSet
+  def route(raw: DataFrame, minAge: Int, batchReasons: Boolean): DataFrame = {
+    // File-level failure (reference scr/etl_batch.py:48-52): every row is
+    // rejected with the same reason; valid side is empty.
+    if (!hasRequired(raw)) return raw.withColumn("motivo", lit("Faltan columnas"))
 
-    if (missing.nonEmpty) {
-      // File-level failure (reference scr/etl_batch.py:48-52): every row is
-      // rejected with the same reason; valid side is empty.
-      val rejected = raw.withColumn("motivo", lit("Faltan columnas"))
-      val valid = raw.sparkSession.createDataFrame(
-        raw.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        normalizedSchema)
-      return Result(valid, rejected)
-    }
-
-    val nombreNorm = py_capitalize(lower(trim(col("nombre"))))
-    val ciudadNorm = py_title(lower(trim(col("ciudad"))))
-    // try_cast: malformed ages route to rejects instead of failing the job
-    // (Spark 4 ANSI mode makes plain cast throw; Python int() raising is the
-    // reference's reject trigger — reference scr/etl_relational.py:71-79).
-    val edadInt = trim(col("edad")).try_cast("int")
-
+    val edadInt = edadExpr
     // Precedence via a single when-chain: first match wins, like the
     // reference's early-continue loop.
     val anyNull = col("nombre").isNull || col("edad").isNull || col("ciudad").isNull
@@ -68,16 +63,31 @@ object ValidatingTransform {
         when(anyNull, lit("Valor None en campo requerido"))
           .when(edadInt.isNull, lit("Edad no convertible a int"))
           .when(edadInt < minAge, concat(lit("Edad < "), lit(minAge.toString)))
-
-    val routed = raw.withColumn("motivo", motivo)
-    val valid = routed
-      .filter(col("motivo").isNull)
-      .select(nombreNorm.as("nombre"), edadInt.as("edad"), ciudadNorm.as("ciudad"))
-    val rejected = routed
-      .filter(col("motivo").isNotNull)
-      .select(inputCols.map(col) :+ col("motivo"): _*)
-    Result(valid, rejected)
+    raw.withColumn("motivo", motivo)
   }
+
+  /** Normalized valid rows of a [[route]]d frame. */
+  def valid(routed: DataFrame): DataFrame =
+    if (!hasRequired(routed))
+      routed.sparkSession.createDataFrame(
+        routed.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        normalizedSchema)
+    else
+      routed.filter(col("motivo").isNull).select(
+        py_capitalize(lower(trim(col("nombre")))).as("nombre"),
+        edadExpr.as("edad"),
+        py_title(lower(trim(col("ciudad")))).as("ciudad"))
+
+  /** Rejected rows of a [[route]]d frame: input columns + `motivo`. */
+  def rejected(routed: DataFrame): DataFrame = routed.filter(col("motivo").isNotNull)
+
+  private def hasRequired(df: DataFrame): Boolean =
+    (RequiredColumns -- df.columns.map(_.toLowerCase)).isEmpty
+
+  // try_cast: malformed ages route to rejects instead of failing the job
+  // (Spark 4 ANSI mode makes plain cast throw; Python int() raising is the
+  // reference's reject trigger — reference scr/etl_relational.py:71-79).
+  private def edadExpr = trim(col("edad")).try_cast("int")
 
   def normalizedSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(

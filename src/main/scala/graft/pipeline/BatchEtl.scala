@@ -23,6 +23,14 @@ import graft.warehouse.{RunId, Warehouse}
   * file). Inside each file all work is set-based — validation is one
   * map-only pass, the dimension join broadcasts, the anti-join shuffles
   * only on the dedup key.
+  *
+  * The four audited counts launch no job of their own. Valid and
+  * rejected are observed on the one checkpoint of the routed file (the
+  * reject sink and the valid side both read that checkpoint); attempted
+  * and inserted come from [[Warehouse.idempotentAppend]]'s checkpoints,
+  * ignored is their difference. The streaming lane
+  * (`IncrementalStream.run`) runs the same [[processBatch]] per
+  * micro-batch.
   */
 class BatchEtl(spark: SparkSession, warehouse: Warehouse, minAge: Int = 25) {
 
@@ -40,28 +48,39 @@ class BatchEtl(spark: SparkSession, warehouse: Warehouse, minAge: Int = 25) {
   def processFile(path: String, rejectDir: Option[String] = None,
                   now: java.time.Instant = java.time.Instant.now()): FileReport = {
     val name = new File(path).getName
-    val runId = RunId.make(name, now)
-    val processedAt = RunId.isoNow(now)
-
-    val raw = extractCsv(path)
     // batch-style reject reasons (scr/etl_batch.py:58-62) — this pipeline
     // models the batch script, whose reject files the goldens pin
-    val routed = ValidatingTransform(raw, minAge, batchReasons = true)
-    val valid = routed.valid.cache()
-    val validCount = valid.count()
-    val rejectedCount = routed.rejected.count()
+    processBatch(extractCsv(path), RunId.make(name, now), name, RunId.isoNow(now),
+      batchReasons = true,
+      rejectPath = rejectDir.map(dir => s"$dir/rejected_${name.stripSuffix(".csv")}"))
+  }
 
-    rejectDir.foreach { dir =>
-      if (rejectedCount > 0)
-        // reference column order: sorted union of row keys
-        // (scr/etl_batch.py:75 — sorted(set().union(*keys)))
-        routed.rejected.select(routed.rejected.columns.sorted.map(col): _*)
-          .coalesce(1).write.mode("overwrite")
-          .option("header", "true")
-          // keep raw values verbatim — the reference writes rejects as-read
-          .option("ignoreLeadingWhiteSpace", "false")
-          .option("ignoreTrailingWhiteSpace", "false")
-          .csv(s"$dir/rejected_${name.stripSuffix(".csv")}")
+  /** One batch of raw rows through validate → reject sink → dimension →
+    * idempotent append → audit row, recorded under `runId` and
+    * `sourceName`. `batchReasons` picks the reason vocabulary (see
+    * [[ValidatingTransform.route]]); rejects are written to `rejectPath`
+    * when given and non-empty.
+    */
+  def processBatch(raw: DataFrame, runId: String, sourceName: String, processedAt: String,
+                   batchReasons: Boolean, rejectPath: Option[String] = None): FileReport = {
+    val (routed, counts) = Warehouse.countedCheckpoint(
+      ValidatingTransform.route(raw, minAge, batchReasons),
+      "valid" -> col("motivo").isNull, "rejected" -> col("motivo").isNotNull)
+    val validCount = counts("valid")
+    val rejectedCount = counts("rejected")
+    val valid = ValidatingTransform.valid(routed)
+
+    if (rejectedCount > 0) rejectPath.foreach { out =>
+      val rejected = ValidatingTransform.rejected(routed)
+      // reference column order: sorted union of row keys
+      // (scr/etl_batch.py:75 — sorted(set().union(*keys)))
+      rejected.select(rejected.columns.sorted.map(col): _*)
+        .coalesce(1).write.mode("overwrite")
+        .option("header", "true")
+        // keep raw values verbatim — the reference writes rejects as-read
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .csv(out)
     }
 
     // J1: set-based dimension upsert, then broadcast join for the FK.
@@ -78,10 +97,9 @@ class BatchEtl(spark: SparkSession, warehouse: Warehouse, minAge: Int = 25) {
       Seq("nombre", "edad", "ciudad_id"))
 
     // K5: data-then-audit commit ordering (reference scr/etl_batch.py:148,163).
-    warehouse.appendAudit("etl_runs", runId, processedAt, name,
+    warehouse.appendAudit("etl_runs", runId, processedAt, sourceName,
       validCount, rejectedCount, stats.inserted, stats.ignored)
-    valid.unpersist()
-    FileReport(name, runId, validCount, rejectedCount, stats.inserted, stats.ignored)
+    FileReport(sourceName, runId, validCount, rejectedCount, stats.inserted, stats.ignored)
   }
 
   /** S3: deterministic glob order drives processing (and id) order. */

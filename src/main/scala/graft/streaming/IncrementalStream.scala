@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-import graft.operators.ValidatingTransform
+import graft.pipeline.BatchEtl
 import graft.warehouse.{RunId, Warehouse}
 
 /** The reference's incremental model (SURVEY.md §2.9) generalized to
@@ -26,12 +26,13 @@ object IncrementalStream {
     StructField("nombre", StringType), StructField("edad", StringType),
     StructField("ciudad", StringType)))
 
-  /** Incremental validating load: every micro-batch runs the same
-    * validate -> dimension -> idempotent-append pipeline as the batch
-    * path; `run_id` is the micro-batch id.
+  /** Incremental validating load: every micro-batch runs the batch
+    * path's own per-batch body ([[BatchEtl.processBatch]]) with the
+    * relational reason vocabulary; `run_id` is the micro-batch id.
     */
   def run(spark: SparkSession, warehouse: Warehouse, inputDir: String,
           checkpointDir: String, minAge: Int = 25): StreamingQuery = {
+    val etl = new BatchEtl(spark, warehouse, minAge)
     val stream = spark.readStream
       .option("header", "true")
       .schema(rawSchema)
@@ -41,23 +42,8 @@ object IncrementalStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val routed = ValidatingTransform(batch, minAge)
-        val valid = routed.valid.cache()
-        try {
-          val runId = s"stream_batch_$batchId"
-          val processedAt = RunId.isoNow()
-          val dim = warehouse.ensureDimension("ciudades",
-            valid.select(col("ciudad").as("nombre")), "nombre", "ciudad_id")
-          val withFk = valid
-            .join(broadcast(dim.select(col("ciudad_id"), col("nombre").as("ciudad"))),
-              Seq("ciudad"))
-            .select(col("nombre"), col("edad"), col("ciudad_id"),
-              lit(processedAt).as("processed_at"), lit(runId).as("run_id"))
-          val stats = warehouse.idempotentAppend("personas_limpias", withFk,
-            Seq("nombre", "edad", "ciudad_id"))
-          warehouse.appendAudit("etl_runs", runId, processedAt, s"batch_$batchId",
-            valid.count(), routed.rejected.count(), stats.inserted, stats.ignored)
-        } finally valid.unpersist()
+        etl.processBatch(batch, s"stream_batch_$batchId", s"batch_$batchId",
+          RunId.isoNow(), batchReasons = false)
         ()
       }
       .start()

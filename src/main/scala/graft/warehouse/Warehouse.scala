@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Parquet-backed warehouse with the reference's write semantics, set-based.
   *
@@ -155,6 +155,13 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * the prune. The reverse mismatch (no `partitionCol` against a
     * partitioned table, or a different column) has no safe degradation
     * and refuses loudly.
+    *
+    * Counts ride the jobs that materialize the frames they count:
+    * `attempted` is observed on an eager checkpoint of `incoming`, and
+    * `inserted` on an eager checkpoint of the insert set (see
+    * [[Warehouse.countedCheckpoint]]); the write reads the insert set's
+    * checkpoint, and an empty insert set writes nothing, so a replay
+    * leaves no new file behind.
     */
   def idempotentAppend(table: String, incoming: DataFrame, keys: Seq[String],
                        orderCol: Option[String] = None,
@@ -188,14 +195,15 @@ class Warehouse(val spark: SparkSession, val root: String) {
             "layout would mix directory depths and break every read")
       }
     }
-    val attempted = incoming.count()
+    val (input, inputCounts) = Warehouse.countedCheckpoint(incoming, "rows" -> lit(true))
+    val attempted = inputCounts("rows")
     val deduped = orderCol match {
       case Some(c) =>
         // Deterministic tie-break: keep the first row per key in input order.
         val w = Window.partitionBy(keys.map(col): _*).orderBy(col(c))
-        incoming.withColumn("__rn", row_number().over(w))
+        input.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
-      case None => incoming.dropDuplicates(keys)
+      case None => input.dropDuplicates(keys)
     }
     val toInsert = readIfExists(table) match {
       case Some(existing) =>
@@ -228,16 +236,13 @@ class Warehouse(val spark: SparkSession, val root: String) {
         deduped.join(scoped.select(keys.map(col): _*), keys, "left_anti")
       case None => deduped
     }
-    // One job: append and count via a cheap re-read delta would re-scan; we
-    // count the planned insert set instead (same number, computed once).
-    val insertedDf = toInsert.cache()
-    val inserted = insertedDf.count()
+    val (insertSet, insertCounts) = Warehouse.countedCheckpoint(toInsert, "rows" -> lit(true))
+    val inserted = insertCounts("rows")
     if (inserted > 0) effectivePartitionCol match {
       case Some(pc) =>
-        insertedDf.write.mode("append").partitionBy(pc).parquet(path(table))
-      case None => insertedDf.write.mode("append").parquet(path(table))
+        insertSet.write.mode("append").partitionBy(pc).parquet(path(table))
+      case None => insertSet.write.mode("append").parquet(path(table))
     }
-    insertedDf.unpersist()
     AppendStats(attempted, inserted, attempted - inserted)
   }
 
@@ -456,26 +461,32 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * rank and the range-partitioned rank agree everywhere); Verify's
     * entry run no longer emits `WindowExec: No Partition Defined` from
     * this path.
+    *
+    * Against an existing dimension the new members are materialized
+    * once, counted on the way (an observed checkpoint); when there are
+    * none — the steady state of a feed — the dimension frame already
+    * read is returned as is: no max id, no id assignment, no write.
+    * Otherwise the number of members written comes from the partition
+    * counts [[assignSurrogateIds]] collects anyway.
     */
   def ensureDimension(table: String, incoming: DataFrame, nameCol: String,
                       idCol: String): DataFrame = {
-    val existing = readIfExists(table)
-    val newMembers = {
-      val distinctIncoming = incoming.select(col(nameCol)).filter(col(nameCol).isNotNull).distinct()
-      existing match {
-        case Some(dim) => distinctIncoming.join(dim.select(nameCol), Seq(nameCol), "left_anti")
-        case None => distinctIncoming
-      }
+    val distinctIncoming = incoming.select(col(nameCol)).filter(col(nameCol).isNotNull).distinct()
+    val (newMembers, maxId) = readIfExists(table) match {
+      case Some(dim) =>
+        val (members, counts) = Warehouse.countedCheckpoint(
+          distinctIncoming.join(dim.select(nameCol), Seq(nameCol), "left_anti"),
+          "rows" -> lit(true))
+        if (counts("rows") == 0L) return dim
+        val maxId = Option(dim.agg(max(col(idCol))).head().get(0))
+          .map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
+        (members, maxId)
+      case None => (distinctIncoming, 0L)
     }
-    val maxId: Long = existing
-      .flatMap(df => Option(df.agg(max(col(idCol))).head().get(0)))
-      .map(_.asInstanceOf[Number].longValue())
-      .getOrElse(0L)
-    val withIds = assignSurrogateIds(newMembers, idCol, maxId, Seq(nameCol))
-      .select(col(idCol), col(nameCol))
-    val newCount = withIds.count()
-    if (newCount > 0) withIds.write.mode("append").parquet(path(table))
-    else if (existing.isEmpty) withIds.write.mode("overwrite").parquet(path(table))
+    val (withIds, newCount) = assignSurrogateIds(newMembers, idCol, maxId, Seq(nameCol))
+    // an empty first batch still creates the (empty) dimension table
+    withIds.select(col(idCol), col(nameCol)).write
+      .mode(if (newCount > 0) "append" else "overwrite").parquet(path(table))
     read(table)
   }
 
@@ -483,9 +494,11 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * after `offset`, without a single-partition window: per-partition local
     * ranks + partition-size prefix sums (the zipWithIndex pattern expressed
     * on the Dataset API). Deterministic given a deterministic input order.
+    * Returns the frame with ids and its row count (the sum of the
+    * partition sizes the prefix sums need anyway).
     */
   def assignSurrogateIds(df: DataFrame, idCol: String, offset: Long,
-                         orderCols: Seq[String]): DataFrame = {
+                         orderCols: Seq[String]): (DataFrame, Long) = {
     // For bounded inputs a global row_number is fine; for scale, sort then
     // use per-partition ranks. We sort-repartition first so ids follow
     // orderCols deterministically.
@@ -509,9 +522,9 @@ class Warehouse(val spark: SparkSession, val root: String) {
     }
     val prefixUdf = udf((pid: Int) => prefix(pid))
     val w = Window.partitionBy(col("__pid")).orderBy(orderCols.map(col): _*)
-    withPart
+    (withPart
       .withColumn(idCol, row_number().over(w).cast("long") + prefixUdf(col("__pid")))
-      .drop("__pid")
+      .drop("__pid"), counts.values.sum)
   }
 
   /** K6 — one-shot schema migration: if `table` exists but lacks any of the
@@ -578,7 +591,6 @@ class Warehouse(val spark: SparkSession, val root: String) {
 
   def readBucketed(table: String): DataFrame = spark.table(s"graft_$table")
 
-  /** K5 — append one audit row per run (reference scr/etl_batch.py:156-163). */
   /** Small-file compaction: rewrite `table` into ⌈rows / targetRowsPerFile⌉
     * files. Continuous idempotent appends leave one small parquet file per
     * micro-batch; at warehouse scale the file count (not data size) comes to
@@ -601,6 +613,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
     (before, if (nFiles < before) parquetFiles else before)
   }
 
+  /** K5 — append one audit row per run (reference scr/etl_batch.py:156-163). */
   def appendAudit(table: String, runId: String, startedAt: String, sourceFile: String,
                   validCount: Long, rejectedCount: Long, insertedNew: Long,
                   ignoredDuplicates: Long): Unit = {
@@ -610,6 +623,38 @@ class Warehouse(val spark: SparkSession, val root: String) {
         "inserted_new", "ignored_duplicates")
       .write.mode("append").parquet(path(table))
   }
+}
+
+object Warehouse {
+
+  /** Materializes `df` with an eager `localCheckpoint` that counts, in the
+    * same job, the rows matching each named condition; returns the
+    * checkpoint and the counts by name.
+    *
+    * Placement rule: the observation sits at the TOP of the plan the
+    * checkpoint materializes, and is read only after that full action.
+    * Nested under a join or aggregate, the optimizer may prune the
+    * observed node (an anti-join whose result is provably empty, say),
+    * and the metrics then come back missing; a partial action (`head`,
+    * `isEmpty`, `limit`) sees only the rows it pulled. A missing metric
+    * fails loudly here instead of reading as zero.
+    *
+    * The metrics are read off the checkpointed query's own execution
+    * once the action has returned, not through an `Observation`, whose
+    * `get` waits for the listener bus to deliver the query's end event
+    * (and never returns if a saturated bus drops it).
+    */
+  def countedCheckpoint(df: DataFrame,
+                        conditions: (String, Column)*): (DataFrame, Map[String, Long]) = {
+    val metrics = conditions.map { case (name, cond) => count(when(cond, lit(1))).as(name) }
+    val observed = df.observe(CountsName, metrics.head, metrics.tail: _*)
+    val checkpoint = observed.localCheckpoint(true)
+    val row = observed.queryExecution.observedMetrics.getOrElse(CountsName,
+      throw new IllegalStateException("countedCheckpoint: the observed counts are missing"))
+    (checkpoint, conditions.map { case (name, _) => name -> row.getAs[Long](name) }.toMap)
+  }
+
+  private val CountsName = "graft_counted_checkpoint"
 }
 
 /** Run-id generation — reference scr/etl_batch.py:24-28: compact UTC

@@ -256,4 +256,45 @@ class EtlSpec extends SparkSpec {
     // audit table has one row per file per run
     assert(wh.read("etl_runs").count() == 4)
   }
+
+  test("processFile job budget: a warm file with no new city, and a replay") {
+    val in = tempDir("in")
+    val wh = new Warehouse(spark, tempDir("wh"))
+    def write(name: String, body: String): String = {
+      val p = java.nio.file.Paths.get(s"$in/$name")
+      java.nio.file.Files.writeString(p, "nombre,edad,ciudad\n" + body)
+      p.toString
+    }
+    val f1 = write("f1.csv", "walter,26,San Lucas\nluz,30,valle alto\nana,23,cali\n")
+    val f2 = write("f2.csv", "nuria,44,san lucas\nhector,treinta,Valle Alto\nbo,31,VALLE ALTO\n")
+    val etl = new BatchEtl(spark, wh)
+    etl.processFile(f1)
+
+    // the stages of every job started, named by call site
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString("+"))
+    }
+    def jobsOf(call: => BatchEtl#FileReport): (Seq[String], BatchEtl#FileReport) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.clear()
+      val r = call
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (jobs.asScala.toSeq, r)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // every count rides a job that materializes its frame, and an
+      // unchanged dimension is not rewritten: a count action or a
+      // surrogate-id pass brought back shows up here
+      val (warmJobs, warm) = jobsOf(etl.processFile(f2))
+      assert(warm.validCount == 2 && warm.rejectedCount == 1 && warm.insertedNew == 2)
+      assert(warmJobs.size <= 12, s"warm file with no new city ran ${warmJobs.size} jobs: $warmJobs")
+      val (replayJobs, replay) = jobsOf(etl.processFile(f1))
+      assert(replay.insertedNew == 0 && replay.ignoredDuplicates == 2)
+      assert(replayJobs.size <= 11, s"replay ran ${replayJobs.size} jobs: $replayJobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(wh.read("ciudades").count() == 2)
+  }
 }
