@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,11 +8,7 @@ object Verify {
     // optional trailing names = dev-mode subset (the driver passes none)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-verify", cpus.toInt)
       // tmpfs shuffle dirs (see Bench.scala): the VM disk is slow/shared
       .config("spark.local.dir",
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark" else "/tmp")

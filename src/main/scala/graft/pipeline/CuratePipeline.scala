@@ -31,7 +31,8 @@ import graft.operators.{Bpe, CorpusOps, Decontam, Dedup, Privacy, QualityModel, 
   *
   * Every stage is declarative and shuffle-bounded; the driver touches only
   * bounded artifacts (model weights, merge list, stage counts). Returns
-  * per-stage (docs, sample row) counts; `main` prints them.
+  * the per-stage doc counts (the packed block count for the last stage)
+  * and the packed frame; `main` prints the counts.
   */
 object CuratePipeline {
 
@@ -61,8 +62,8 @@ object CuratePipeline {
     * lifecycle: token ids must not drift across curation runs) — or, on
     * first use, trains on the sample once and persists the artifact for
     * every later run. The artifact's family must match `tokenizer`.
-    */
-  /** `maskSpans = true` inserts the span-grain rewrite between fuzzy
+    *
+    * `maskSpans = true` inserts the span-grain rewrite between fuzzy
     * dedup and decontamination (the Lee et al. 2021 ordering: doc-grain
     * dedup removes whole near-dups, span masking then strips the
     * cross-doc duplicated k-gram spans INSIDE the survivors —
@@ -97,9 +98,10 @@ object CuratePipeline {
       // each stage feeds the next AND the returned final frame — eager
       // localCheckpoint, not cache, so a caller re-running the pipeline
       // in one session cannot accumulate stage blocks (ContextCleaner
-      // reclaims them once the previous run's result is dropped)
-      val mat = df.localCheckpoint(true)
-      stages += Stage(name, mat.count())
+      // reclaims them once the previous run's result is dropped); the
+      // stage's count rides the checkpoint's own job
+      val (mat, counts) = graft.warehouse.Warehouse.countedCheckpoint(df, "docs" -> lit(true))
+      stages += Stage(name, counts("docs"))
       mat
     }
 
@@ -221,9 +223,8 @@ object CuratePipeline {
           UnigramLm.DefaultMaxPieceLen)
     }
     val (ids, _) = tok.encodeIds(mixed, "text", "doc_id")
-    val packed = CorpusOps.packTokens(ids, "doc_id", "token_ids",
-      blockSize = 512, blocks = 8)
-    stages += Stage("packed_blocks", packed.count())
+    val packed = record("packed_blocks", CorpusOps.packTokens(ids, "doc_id", "token_ids",
+      blockSize = 512, blocks = 8))
     (stages.result(), packed)
   }
 

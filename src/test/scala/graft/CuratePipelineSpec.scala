@@ -26,6 +26,39 @@ class CuratePipelineSpec extends SparkSpec {
     }
   }
 
+  test("warm run: compiles (almost) no class again, and no stage count runs its own job") {
+    // the codegen cache is JVM-wide and static: a session built anywhere
+    // but GraftSession.builder before this one would have fixed it at 100
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    val sfDir = "/root/testdata/sf0.001"
+    val (cold, _) = CuratePipeline.run(spark, sfDir)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val compiled0 = compiles.getCount
+    val warm = try {
+      val (stages, _) = CuratePipeline.run(spark, sfDir)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      stages
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val compiled = compiles.getCount - compiled0
+
+    assert(warm == cold)
+    // a run needs ~200 generated classes; under the default 100-entry
+    // cache a warm run compiled 186 of them again, here it compiles 0
+    assert(compiled <= 5, s"warm run compiled $compiled classes")
+    // each stage count rides its checkpoint's job: 82 jobs here, 97 when
+    // every stage ran a count action after its checkpoint
+    assert(jobs.get <= 83, s"warm run ran ${jobs.get} jobs")
+  }
+
   test("maskSpans option: span_mask stage appears after fuzzy dedup and strips cross-doc spans") {
     val (stages, packed) = CuratePipeline.run(spark, "/root/testdata/sf0.001",
       maskSpans = true)

@@ -3,15 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite, UTC, small shuffle. */
+/** Shared local session for specs — one per suite, built like the
+  * engine's own (local[4], 4 shuffle partitions, UTC, the codegen cache). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(getClass.getSimpleName, 4).getOrCreate()
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
