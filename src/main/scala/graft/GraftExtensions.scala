@@ -6,13 +6,15 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 import graft.functions._
 
-/** SQL-surface registration for graft's native expressions.
+/** The one list of graft's Catalyst additions: native SQL functions,
+  * optimizer rules and planner strategies.
   *
   * The reference's only declarative entry point is SQL text submitted to
   * SQLite (SURVEY.md §3.3); graft exposes the same surface on Spark: every
   * custom expression is callable from `spark.sql` either via
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (cluster-wide) or
-  * [[GraftExtensions.register]] on a live session.
+  * `--conf spark.sql.extensions=graft.GraftExtensions` (cluster-wide),
+  * `GraftSession.builder` (which installs these extensions on the session
+  * it creates) or [[GraftExtensions.register]] on a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
@@ -23,6 +25,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name), builder))
     }
     e.injectOptimizerRule(_ => graft.plans.SimplifyPyText)
+    // after operator optimization, so cast-aware rules see Spark's Cast
+    e.injectPreCBORule(_ => graft.plans.FastDecimalCast)
     // whole-operator extension: TopKPerKey plans through the same strategy
     // TopK.perKey registers at call time, so cluster-wide configs get it
     // without any code call
@@ -79,14 +83,18 @@ object GraftExtensions {
       InterleaveBits(exprs.head, exprs(1), bits)
     }))
 
-  /** Register on an existing session (temp functions + optimizer rule). */
+  /** Register on an existing session (temp functions + optimizer rules).
+    * A rule the session already runs, because it was built with these
+    * extensions, is not added a second time.
+    */
   def register(spark: SparkSession): Unit = {
     all.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "scala_udf")
     }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.SimplifyPyText))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SimplifyPyText
+    val installed = spark.sessionState.optimizer.batches.flatMap(_.rules).toSet
+    val missing = Seq(graft.plans.SimplifyPyText, graft.plans.FastDecimalCast)
+      .filterNot(installed.contains)
+    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ missing
   }
 }

@@ -15,6 +15,16 @@ import org.apache.spark.sql.SparkSession
   * engine's measured working set; [[CodegenCacheEntries]] gives the
   * measurement and why the first session a JVM creates must come from
   * here.
+  *
+  * The builder also installs [[GraftExtensions]] (`withExtensions`): graft's
+  * SQL functions, `SimplifyPyText`, `TopKStrategy` and `FastDecimalCast`,
+  * the rule that keeps the reference queries' double → DECIMAL funnels off
+  * Spark's per-value `Double.toString` → `BigDecimal` path. Extensions
+  * reach only a session this builder creates: `getOrCreate` hands back an
+  * existing session unchanged, so a session built elsewhere first runs
+  * every funnel on the slow path, silently (same first-session caveat as
+  * the codegen cache). `GraftExtensions.register` adds the functions and
+  * rules to such a session after the fact.
   */
 object GraftSession {
 
@@ -47,6 +57,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
 
   def getOrCreate(appName: String = "graft", cores: Int = 32): SparkSession = {
     val spark = builder(appName, cores).getOrCreate()
@@ -57,9 +68,10 @@ object GraftSession {
 
 /** Loaders for the harness's parquet star schema (TESTDATA.md).
   *
-  * Plain `spark.read.parquet` so Catalyst's datasource V2 scan handles
-  * column pruning and filter pushdown — callers `select`/`filter` and the
-  * scan reads only what the plan needs.
+  * Plain `spark.read.parquet`: parquet is on `spark.sql.sources.useV1SourceList`,
+  * so the executed plan is a V1 `FileScan parquet` (`FileSourceScanExec`),
+  * which handles column pruning and filter pushdown — callers
+  * `select`/`filter` and the scan reads only what the plan needs.
   */
 object Tables {
   val all: Seq[String] = Seq(

@@ -16,6 +16,15 @@ import graft.operators.Validator
   * bit-identical regardless of partitioning (double addition is not
   * associative; decimal addition is — this is what makes the engine's
   * results reproducible on a 1000-executor cluster, not just local[32]).
+  *
+  * The funnel has a per-value cost: Spark's `Cast(double → decimal)`
+  * builds every value through `Double.toString` → `BigDecimal`, more than
+  * half of q1's task time on the `olap_scan` benchmark.
+  * `graft.plans.FastDecimalCast`, installed on every session
+  * `GraftSession.builder` creates, rewrites those casts to an exact
+  * compact-long fast path that falls back to Spark's `Cast` whenever it
+  * cannot prove the same answer; the queries below keep their plain
+  * `cast(DecimalType(38, s))` text.
   */
 object ReferenceQueries {
 

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.DecimalType
+import graft.plans.{DoubleToDecimal, FastDecimalCast}
 import graft.queries.ReferenceQueries
 
 /** Scale-shape regression guards: these assert properties of the physical
@@ -410,5 +414,71 @@ class PlanSpec extends SparkSpec {
     // joins); narrowness is structural — sideHash projects to (key, md5)
     // before the join inputs
     assert(p.sliding("Join".length).count(_ == "Join") == 1, p.take(1200))
+  }
+
+  // --- FastDecimalCast: double → DECIMAL funnels skip Spark's BigDecimal path
+
+  private def planExprs(plan: LogicalPlan) = plan.collect { case p => p.expressions }.flatten
+  private def fastCasts(plan: LogicalPlan) =
+    planExprs(plan).flatMap(_.collect { case f: DoubleToDecimal => f })
+  private def decimalCasts(plan: LogicalPlan) =
+    planExprs(plan).flatMap(_.collect { case c: Cast if c.dataType.isInstanceOf[DecimalType] => c })
+
+  /** `f` with FastDecimalCast excluded from the session's optimizer. */
+  private def withoutFastCast[T](f: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, FastDecimalCast.ruleName)
+    try f finally spark.conf.unset(key)
+  }
+
+  test("GraftSession.builder installs FastDecimalCast: the suite's session " +
+    "was not built elsewhere first") {
+    assert(spark.sessionState.optimizer.preCBORules.contains(FastDecimalCast))
+    val optimized = SparkEntry.queries("q1_pricing_summary")(spark, sf).queryExecution.optimizedPlan
+    // every decimal sum of q1 (sum_qty, sum_base_price, sum_disc_price,
+    // sum_charge, avg_disc; avg_qty reuses sum_qty's) is rewritten
+    assert(fastCasts(optimized).map(_.canonicalized).distinct.size == 5, optimized)
+    assert(decimalCasts(optimized).isEmpty, optimized)
+  }
+
+  test("FastDecimalCast rewrites double-source casts only, and is idempotent") {
+    val typed = spark.range(3).select(col("id").cast("double").as("d"), col("id").as("l"),
+      col("id").cast("int").as("i"), col("id").cast(DecimalType(10, 2)).as("dec"),
+      col("id").cast("string").as("s"))
+    val casts = typed.select(typed.columns.map(c => col(c).cast(DecimalType(38, 4)).as(c)).toSeq: _*)
+    val once = FastDecimalCast(casts.queryExecution.analyzed)
+    assert(fastCasts(once).map(_.child.dataType.simpleString) == Seq("double"), once)
+    val kept = decimalCasts(once).filter(_.dataType == DecimalType(38, 4))
+      .map(_.child.dataType.simpleString)
+    assert(kept.sorted == Seq("bigint", "decimal(10,2)", "int", "string"), once)
+    assert(FastDecimalCast(once) == once)
+    val q1 = SparkEntry.queries("q1_pricing_summary")(spark, sf).queryExecution.optimizedPlan
+    assert(FastDecimalCast(q1) == q1)
+  }
+
+  test("FastDecimalCast leaves q1/q3 scan pushdown unchanged") {
+    def scans(name: String) = SparkEntry.queries(name)(spark, sf).queryExecution
+      .executedPlan.toString.linesIterator.filter(_.contains("FileScan"))
+      .map(_.replaceAll("#\\d+", "")).toSeq.sorted
+    Seq("q1_pricing_summary", "q3_shipping_priority").foreach { q =>
+      val on = scans(q)
+      assert(on.exists(_.contains("PushedFilters: [IsNotNull(l_shipdate)")), on)
+      assert(on == withoutFastCast(scans(q)), q)
+    }
+  }
+
+  test("FastDecimalCast: funnel query results identical with the rule on and off") {
+    Seq("q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
+      "q18_large_orders", "a7_moments", "w1_window_running").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(fastCasts(df.queryExecution.optimizedPlan).nonEmpty, q)
+      val on = df.collect().toSeq
+      val off = withoutFastCast {
+        val slow = SparkEntry.queries(q)(spark, sf)
+        assert(fastCasts(slow.queryExecution.optimizedPlan).isEmpty, q)
+        slow.collect().toSeq
+      }
+      assert(on.nonEmpty && on == off, q)
+    }
   }
 }
