@@ -59,6 +59,22 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
 
+  /** The session of the board mains (Bench, Measure, Verify):
+    * `SPARK_GRAFT_CPUS` cores (else `defaultCores`), and shuffle and spill
+    * on tmpfs when the host has one — a single-node stand-in for a
+    * cluster's local SSDs, since a slow shared disk was the dominant
+    * run-to-run variance source.
+    */
+  def forMain(appName: String, defaultCores: Int): SparkSession = {
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString).toInt
+    val shm = new java.io.File("/dev/shm")
+    val spark = builder(appName, cores)
+      .config("spark.local.dir", if (shm.isDirectory) "/dev/shm/graft-spark" else "/tmp")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def getOrCreate(appName: String = "graft", cores: Int = 32): SparkSession = {
     val spark = builder(appName, cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -7,13 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing names = dev-mode subset (the driver passes none)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder("graft-verify", cpus.toInt)
-      // tmpfs shuffle dirs (see Bench.scala): the VM disk is slow/shared
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark" else "/tmp")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-verify", defaultCores = 4)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -24,20 +18,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // every control char of the oracle SQL escaped: one raw tab or CR
+    // would make a JSON reader reject the whole file
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

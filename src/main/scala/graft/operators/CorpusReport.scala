@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame}
+
+import graft.functions.FixedPointSum.{Quantum, qsum, qsumFx}
 
 /** One-call corpus datasheet — the summary table a dataset release
   * review reads first ("Datasheets for Datasets", Gebru et al. 2021 —
@@ -21,18 +22,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   * result.
   */
 object CorpusReport {
-
-  /** Fixed-point quality sum as DECIMAL(38,0) — exact, and exactly
-    * MERGEABLE: per-drop partial sums add without any float
-    * re-association, so the merged mean is bit-identical to the
-    * whole-corpus one.
-    */
-  private def qsumFx(term: Column): Column =
-    sum(floor(least(greatest(term, lit(-1.0e6)), lit(1.0e6)) * lit(1.0e12))
-      .cast(DecimalType(38, 0)))
-
-  private def qsum(term: Column): Column =
-    qsumFx(term).cast("double") / lit(1.0e12)
 
   /** (metric, value) datasheet rows: n_docs, n_chars_total,
     * n_tokens_total, n_langs, n_sources, exact_dup_rate, mean_quality,
@@ -131,7 +120,7 @@ object CorpusReport {
       hll_sketch_estimate(hll_union_agg(col("langs_hll"))).as("n_langs"),
       hll_sketch_estimate(hll_union_agg(col("sources_hll"))).as("n_sources"),
       hll_sketch_estimate(hll_union_agg(col("texts_hll"))).as("n_unique_texts"),
-      (sum(col("q_sum_fx")).cast("double") / lit(1.0e12)).as("q_sum"),
+      (sum(col("q_sum_fx")).cast("double") / lit(Quantum)).as("q_sum"),
       sum(col("n_pii_docs")).as("n_pii_docs"))
     def m(name: String, v: Column) =
       struct(lit(name).as("metric"), v.as("value"))

@@ -898,7 +898,7 @@ object Dedup {
     * the session's autoBroadcastJoinThreshold: that 10 MB heuristic
     * prices broadcast against a same-sized shuffle, but here the
     * alternative shuffles the STORE — the big side by contract.
-    * Measured at a 1M-unit store (ProbeMediaStore): a 10k-unit batch
+    * Measured at a 1M-unit store (SURVEY.md §8.9): a 10k-unit batch
     * explodes to ~15 MB, and "respecting" the 10 MB heuristic turned
     * its 1.4 s broadcast screen into a 10.9 s store shuffle — the
     * fallback exists to keep an oversized drain from FAILING, not to
@@ -1041,22 +1041,9 @@ object Dedup {
       .select(col("a"), col("b")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     edges.unpersist()
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // union by min: the smaller root stays the label
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
-      parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
-    }
-    val labels = parent.keys.map(id => (id, find(id))).toSeq
+    val uf = new MinLabelUnionFind
+    es.foreach { case (a, b) => uf.union(a, b); uf.add(a); uf.add(b) }
+    val labels = uf.labels
     val spark = df.sparkSession
     import spark.implicits._
     val repDf = labels.toDF(idCol, "comp")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.functions.FixedPointSum.{Quantum, qsum, qsumLocal, quantize}
+
 /** Event-graph analytics: first-order Markov transition extraction over an
   * event stream, and weighted PageRank over the resulting (or any) edge
   * list. The behavioral-analytics counterpart of the reference's audit
@@ -30,31 +32,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Graph {
 
-  private val Quantum = 1.0e12
-  private val Clamp = 1.0e6
-
-  /** Fixed-point exact sum: order-free and engine-portable. */
-  private def qsum(term: Column): Column =
-    sum(floor(least(greatest(term, lit(-Clamp)), lit(Clamp)) * lit(Quantum))
-      .cast(DecimalType(38, 0))).cast("double") / lit(Quantum)
-
-  /** [[qsum]]'s clamp/floor/exact-integer-sum grid replicated on the
-    * driver for the small-graph PageRank fast path: identical IEEE ops
-    * in the identical order (clamp with least/greatest's NaN-is-largest
-    * semantics, ×Quantum, floor-to-long, exact integer sum, one
-    * correctly-rounded conversion, one division). The integer sum is
-    * order-free, so driver iteration order cannot diverge from any
-    * distributed partitioning — the same argument the grid itself makes.
-    */
-  private def qsumLocal(terms: Iterable[Double]): Double = {
-    var acc = BigInt(0)
-    terms.foreach { t =>
-      val c = if (t.isNaN) Clamp else math.min(math.max(t, -Clamp), Clamp)
-      acc += math.floor(c * Quantum).toLong
-    }
-    acc.toDouble / Quantum
-  }
-
   /** Caps under which [[pageRankCounted]] runs its rank loop on the
     * driver (the Dedup.clusterRepsLocal precedent): the transition
     * probabilities are still derived DISTRIBUTED (one pass over the edge
@@ -62,9 +39,9 @@ object Graph {
     * is measured model-sized (≤ 64k nodes AND ≤ 1M edges — a few MB
     * collected), `iters` rounds of join + aggregate + checkpoint over
     * node-sized frames collapse to in-memory folds on the SAME qsum grid
-    * ([[qsumLocal]]) — bit-identical ranks, ~3 scheduler round-trips per
-    * round saved. Above the caps nothing changes: the loop stays fully
-    * distributed, no driver collect anywhere.
+    * ([[graft.functions.FixedPointSum.qsumLocal]]) — bit-identical ranks,
+    * ~3 scheduler round-trips per round saved. Above the caps nothing
+    * changes: the loop stays fully distributed, no driver collect anywhere.
     */
   private[graft] val LocalNodeCap = 1 << 16
   private[graft] val LocalEdgeCap = 1 << 20
@@ -205,9 +182,10 @@ object Graph {
     * rank(src)·p; dangling = grid-sum of non-source ranks (0 when none,
     * matching the coalesce); rank′ = base + d·(incoming + dangling/n);
     * the optional L1 delta on the same grid. Every cross-row fold goes
-    * through [[qsumLocal]] and every per-element op is the same IEEE
-    * double op the distributed expressions evaluate, so ranks are
-    * BIT-IDENTICAL (GraphSpec pins local ≡ forced-distributed).
+    * through [[graft.functions.FixedPointSum.qsumLocal]] and every
+    * per-element op is the same IEEE double op the distributed expressions
+    * evaluate, so ranks are BIT-IDENTICAL (GraphSpec pins local ≡
+    * forced-distributed).
     * `pe`/`nodes` arrive materialized; node values keep their original
     * type through the generic Row round-trip.
     */
@@ -246,9 +224,7 @@ object Graph {
       val accBig = Array.fill[BigInt](nn)(null) // ~9 terms at the clamp —
       var j = 0 //                     spill that group to BigInt exactly
       while (j < m) {
-        val t = ranks(src(j)) * p(j)
-        val c = if (t.isNaN) Clamp else math.min(math.max(t, -Clamp), Clamp)
-        val q = math.floor(c * Quantum).toLong
+        val q = quantize(ranks(src(j)) * p(j))
         val d0 = dst(j)
         if (accBig(d0) != null) accBig(d0) += q
         else {

@@ -342,26 +342,16 @@ object GraphStore {
         m
       }
     // contract endpoints to current roots, then min-label union-find on
-    // the contracted root graph (Dedup.clusterRepsLocal's semantics)
+    // the contracted root graph (the kernel Dedup.clusterRepsLocal uses)
     def rootOf(v: Long): Long = knownMap.getOrElse(v, v)
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    val uf = new MinLabelUnionFind
     val rootSet = scala.collection.mutable.LinkedHashSet.empty[Long]
     touched.foreach(v => rootSet += rootOf(v))
-    eRows.foreach { case (a, b) =>
-      val (ra, rb) = (find(rootOf(a)), find(rootOf(b)))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    eRows.foreach { case (a, b) => uf.union(rootOf(a), rootOf(b)) }
     // the batch CC's full root→root mapping (rep ≠ root entries only)
     val fullMap = scala.collection.mutable.HashMap.empty[Long, Long]
     rootSet.foreach { r =>
-      val rep = find(r)
+      val rep = uf.find(r)
       if (rep != r) fullMap(r) = rep
     }
     val knownRoots = knownMap.values.toSet

@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * row explosion in I/O plus the small-file/listing overhead of 1024
   * partition directories. At 1M units the flat scan beat the banded
   * store 2.2 s vs 4.3 s on an 8-unit batch and 1.4 s vs 14.2 s on a
-  * 10k-unit batch (ProbeMediaStore) — the same shape, not a tuning
+  * 10k-unit batch (SURVEY.md §8.8) — the same shape, not a tuning
   * artifact: banding-on-disk multiplies the bytes every screen reads to
   * save a fraction it can rarely save. The flat layout is the one that
   * survives the scale-up.

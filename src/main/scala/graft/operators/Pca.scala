@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+import graft.functions.FixedPointSum.{Clamp, Quantum, qsum, qsumLocal}
 
 /** PCA over an embedding column, by power iteration on the covariance
   * matrix — the embedding-space diagnostic a training pipeline runs
@@ -27,7 +28,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     PcaSpec. C = Σxy/n − mᵢmⱼ either way (means as literal).
   *   - power iteration: `iters` rounds, each ONE aggregate-collect job
   *     over the d²-row matrix with v as a literal; norm and division on
-  *     the driver replicate the distributed grid exactly ([[qsumLocal]]).
+  *     the driver replicate the distributed grid exactly
+  *     ([[graft.functions.FixedPointSum.qsumLocal]]).
   *   - deflation (second component): λ₁ = v₁ᵀCv₁ via one more literal
   *     mat-vec + driver fixed-point dot; C₂ = C − λ₁·v₁v₁ᵀ is a map-only
   *     projection of C; iterate again on C₂.
@@ -47,31 +49,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * trajectory).
   */
 object Pca {
-
-  private val Quantum = 1.0e12
-  private val Clamp = 1.0e6
-
-  private def qsum(term: Column) =
-    sum(floor(least(greatest(term, lit(-Clamp)), lit(Clamp)) * lit(Quantum))
-      .cast(DecimalType(38, 0))).cast("double") / lit(Quantum)
-
-  /** [[qsum]]'s clamp/floor/exact-integer-sum grid replicated on the
-    * driver, for the d-BOUNDED folds the literal-vector iteration keeps
-    * local (norm, Rayleigh λ): same IEEE ops in the same order — clamp
-    * (NaN → +Clamp, matching least/greatest's NaN-is-largest), ×2^-free
-    * Quantum multiply, floor-to-long, exact integer sum, one correctly-
-    * rounded conversion to double, one division. The decimal sum is
-    * order-free, so driver iteration order cannot diverge from any
-    * distributed partitioning.
-    */
-  private def qsumLocal(terms: Iterable[Double]): Double = {
-    var acc = BigInt(0)
-    terms.foreach { t =>
-      val c = if (t.isNaN) Clamp else math.min(math.max(t, -Clamp), Clamp)
-      acc += math.floor(c * Quantum).toLong
-    }
-    acc.toDouble / Quantum
-  }
 
   /** flat (id, i, x), means (i, m), cov (i, j, c) — all checkpointed.
     *
@@ -152,8 +129,9 @@ object Pca {
     * "broadcast the centers" move, r15): one aggregate-collect job per
     * round over the d²-row matrix, no per-round join, crossJoin, or
     * checkpoint. The norm fold and division replicate the joined
-    * formulation's arithmetic exactly ([[qsumLocal]]; u/nrm is the same
-    * IEEE division wherever it runs), so the learned component — which
+    * formulation's arithmetic exactly
+    * ([[graft.functions.FixedPointSum.qsumLocal]]; u/nrm is the same IEEE
+    * division wherever it runs), so the learned component — which
     * the oracle replays relationally — is bit-identical.
     */
   private def iterate(cov: DataFrame, dim: Int, iters: Int): Array[Double] = {

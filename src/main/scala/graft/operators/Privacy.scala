@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame}
+
+import graft.functions.FixedPointSum.qsum
 
 /** Privacy release gates. PII redaction (TextAnalysis.redactPii) removes
   * direct identifiers from text; this module covers the OTHER half of a
@@ -52,14 +53,6 @@ object Privacy {
         countDistinct(col(sensitiveCol)).as("n_sensitive"))
       .filter(col("n_sensitive") < l)
   }
-
-  /** Fixed-point exact sum (the engine-wide qsum grid): order-free and
-    * engine-portable, so the per-group TVD below hash-matches its SQL
-    * replay under any partitioning.
-    */
-  private def qsum(term: Column): Column =
-    sum(floor(least(greatest(term, lit(-1.0e6)), lit(1.0e6)) * lit(1.0e12))
-      .cast(DecimalType(38, 0))).cast("double") / lit(1.0e12)
 
   /** t-closeness violations (Li, Li & Venkatasubramanian 2007 — public
     * literature): quasi-identifier groups whose SENSITIVE-attribute

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame}
+
+import graft.functions.FixedPointSum.qsum
 
 /** Trained quality filtering: a linear scorer learned DISTRIBUTIVELY by
   * Newton's method — the fasttext-style "train a cheap linear model,
@@ -46,19 +47,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   * r = p(1−p); for the Elliot link σ′(z) = ½/(1+|z|)²).
   */
 object QualityModel {
-
-  /** Fixed-point quantum: terms are floor-quantized to 1e-12 before the
-    * exact integer sum. Clamp bound 1e6 keeps floor(term·1e12) inside the
-    * exactly-convertible long range even for pathological documents
-    * (huge mean_token_len on unsegmented text) instead of overflowing.
-    */
-  private val Quantum = 1e12
-  private val Clamp = 1e6
-
-  /** Exact fixed-point sum of a per-row double term — see class doc. */
-  private def qsum(term: Column): Column =
-    sum(floor(least(greatest(term, lit(-Clamp)), lit(Clamp)) * lit(Quantum))
-      .cast(DecimalType(38, 0))).cast("double") / lit(Quantum)
 
   /** Standardized feature matrix + distilled binary label over documents:
     * features from the rule-based quality pass, label = the heuristic's

@@ -340,7 +340,7 @@ object Retrieval {
     * the maintained per-ingest id blooms instead — still linear in
     * corpus docs (~1.2 bloom bytes/doc) but a driver file read + a
     * map-only filter with NO join, shuffle or scan job (measured 9.1 s
-    * → 2.4 s for a 100-doc append at 2M docs, ProbeBm25Guard), trading
+    * → 2.4 s for a 100-doc append at 2M docs, SURVEY.md §8.10), trading
     * exact K2 semantics for a stated false-positive drop rate (see
     * [[appendBm25Incremental]]).
     * [[compactBm25Incremental]] bounds the partition-count growth (one
@@ -373,7 +373,7 @@ object Retrieval {
     *    smaller than the id column AND free of the anti-join's
     *    shuffle/job machinery: the guard becomes a driver file read
     *    plus a map-only filter (measured 9.1 s → 2.4 s for a 100-doc
-    *    append at 2M docs, `ProbeBm25Guard`) — the steady-state drain
+    *    append at 2M docs, SURVEY.md §8.10) — the steady-state drain
     *    path. The trade is explicit: a false
     *    positive silently DROPS a genuinely-new doc at ~fpp ×
     *    #uncompacted-ingests probability (no false negatives — replay

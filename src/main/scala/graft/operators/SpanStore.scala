@@ -53,7 +53,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * store-size-independent drain probe would need a shingle-keyed point
   * index, still deliberately out of scope. A SMALL probe (a takedown
   * check, a single document — ≲ a few hundred spans) prunes the base
-  * hard: read fraction ≈ touched/lsm_buckets. Numbers: ProbeSpanStore.
+  * hard: read fraction ≈ touched/lsm_buckets. Numbers: SURVEY.md §8.12.
   * [[probe]] is otherwise the
   * [[Dedup.spanStats]] tail over the batch. [[compact]] bounds the
   * partition count (the SketchStore concern) AND migrates the base to
@@ -130,7 +130,7 @@ object SpanStore {
     * DRAIN-shaped probe (every spanIngest batch, tens of thousands of
     * distinct shingles), which touches every bucket at any plausible
     * modulus — so its cost is the per-file open tax, measured 1.8 s at
-    * 256 dirs vs ~10 s at 4096 (ProbeSpanStore, r14) — while the fine
+    * 256 dirs vs ~10 s at 4096 (SURVEY.md §8.13, r14) — while the fine
     * modulus only helps the RARE point probe (flat ~1.2 s either way).
     * A takedown-heavy deployment doing mostly single-document checks
     * can migrate: `compact(dir, lsmBuckets = 4096)`.

@@ -229,7 +229,7 @@ private[graft] object StoreProtocol {
   // (`lsm_buckets` column) at the first ingest and re-recorded by every
   // consolidation — r13's fixed 256 saturated on drain-sized batches (a
   // batch with ≥ 256 distinct keys touched every bucket and re-read the
-  // whole base per append: ProbeGraphStore's 2.6 → 3.9 s drift), and a
+  // whole base per append: the 2.6 → 3.9 s drift, SURVEY.md §8.13), and a
   // hard-coded constant cannot be raised without silently breaking the
   // prune on every store compacted under the old modulus. Readers pin
   // the recorded count ([[pinnedLsmBuckets]] — absent column = the

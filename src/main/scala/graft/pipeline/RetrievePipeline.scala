@@ -416,8 +416,9 @@ object RetrievePipeline {
     * (completing exactly the rows a crashed window left missing), and a
     * bloom false positive in any ONE of them would permanently hole
     * that artifact while its siblings carry the row, breaking the
-    * gate's all-or-nothing contract (ProbeAppend caught exactly this
-    * when the BM25 leg briefly inherited the stack's bloom mode) — but
+    * gate's all-or-nothing contract (a 200k-doc append run caught exactly
+    * this when the BM25 leg briefly inherited the stack's bloom mode;
+    * SURVEY.md §8.11) — but
     * all three are range-pruned to the batch's packed chunk-id window,
     * so their cost tracks the row groups the batch's id range overlaps,
     * not the corpus.
@@ -519,7 +520,7 @@ object RetrievePipeline {
     // job is crash-replay CONVERGENCE, and a bloom false positive here
     // would hole ONE artifact while the siblings carry the chunk —
     // breaking the "all four artifacts consistently" contract the
-    // upstream doc gate provides (observed live by ProbeAppend: one
+    // upstream doc gate provides (observed live, SURVEY.md §8.11: one
     // bm25-only chunk drop at 200k docs). The bloom trade belongs at
     // the doc gate above and in standalone bm25Ingest feeds, where a
     // drop is at least stack-consistent.

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
 import graft.functions.{py_capitalize, py_title}
+import graft.functions.FixedPointSum.qsum
 import graft.operators.Validator
 
 /** The reference's operator surface (SURVEY.md §2) re-expressed as
@@ -437,9 +438,6 @@ object ReferenceQueries {
     // either way; the guard only keeps the bounded collect from NPEing)
     val amax = Option(ev.agg(max(unix_micros(col("ts")))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val qsum: Column => Column = term =>
-      sum(floor(least(greatest(term, lit(-1.0e6)), lit(1.0e6)) * lit(1.0e12))
-        .cast(DecimalType(38, 0))).cast("double") / lit(1.0e12)
     val perUser = ev.filter(col("event_type") === "purchase")
       .groupBy("user_id")
       .agg(
@@ -503,9 +501,6 @@ object ReferenceQueries {
     // empty-table guard: max(ts) is NULL with zero rows (see eventsRfm)
     val amax = Option(ev.agg(max(unix_micros(col("ts")))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val qsum: Column => Column = term =>
-      sum(floor(least(greatest(term, lit(-1.0e6)), lit(1.0e6)) * lit(1.0e12))
-        .cast(DecimalType(38, 0))).cast("double") / lit(1.0e12)
     ev.select(col("user_id"), col("value"),
         floor((lit(amax) - unix_micros(col("ts"))) / lit(8.64e10)).as("age_days"))
       .groupBy("user_id")

@@ -642,7 +642,7 @@ object IncrementalStream {
   }
 
   /** The measured flat-vs-bucketed crossover for the committed-id gate
-    * (ProbeIngestGate, r14: flat scan 0.7–1.7 s growing with corpus;
+    * (SURVEY.md §8.13, r14: flat scan 0.7–1.7 s growing with corpus;
     * leaf addressing 2.3–3.8 s flat; curves cross at ~4–8M committed
     * ids on local[32]). Stores below it gate faster through one pruned
     * docs scan; above it the bucketed base's distribution-independent
