@@ -199,8 +199,8 @@ object CorpusOps {
     * gap-free range ranker ([[globalShuffle]]'s machinery).
     *
     * `rangeRank = false` keeps the single-task-per-source window
-    * formulation as the measurable baseline for the ScaleProbe skew A/B
-    * (identical output — the ordering is the same either way).
+    * formulation as the measurable baseline for the skew A/B (SURVEY.md
+    * §8.6; identical output — the ordering is the same either way).
     *
     * Output: (idCol, keyCol, src_rank, position) — reading in
     * `position` order IS the curriculum.

@@ -939,8 +939,9 @@ object Dedup {
     * in no pair represent themselves.
     *
     * This is the scale-correct OUTPUT for dedup: a pair list is quadratic
-    * in duplicate-cluster size (ScaleProbe's 16x corpus emits 665k pairs
-    * from 80k docs), the keep-list is linear. Each round is one
+    * in duplicate-cluster size (the retired scale probe's 16x corpus,
+    * `git show 7ea0927:src/main/scala/graft/ScaleProbe.scala`, emits 665k
+    * pairs from 80k docs), the keep-list is linear. Each round is one
     * shuffle-join + aggregate; the driver loop only reads a convergence
     * count, never the data.
     *

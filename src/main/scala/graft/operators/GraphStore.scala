@@ -70,12 +70,8 @@ object GraphStore {
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Reader-visible ingests: committed minus incremental-consolidation
-    * retirees ([[StoreProtocol.visibleKeys]]).
-    */
-  private def committedKeys(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Seq[String] =
-    StoreProtocol.visibleKeys(fs, root)
+  /** The per-ingest tables; they share each ingest's commit key. */
+  private val Tables = Seq("labels", "remap", "edges")
 
   private def metaOf(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/meta")
@@ -108,12 +104,10 @@ object GraphStore {
   private def remapTables(spark: SparkSession, dir: String,
                           fs: org.apache.hadoop.fs.FileSystem,
                           committed: Seq[String]): Seq[DataFrame] =
-    committed.sortBy(genOf).flatMap { k =>
+    committed.sortBy(StoreProtocol.genOf).flatMap { k =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/remap/ingest=$k")
       if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
     }
-
-  private def genOf(key: String): Int = StoreProtocol.genOf(key)
 
   /** Resolve `df`'s `comp` column through the remap chain: apply each
     * merge-sized remap table in append order (each at most once — the
@@ -128,12 +122,6 @@ object GraphStore {
           coalesce(col("new_comp"), col("comp")).as("comp"): _*)
     }
 
-  /** Ingest a batch of undirected edges (two node columns): committed
-    * labels for the touched nodes load (pruned), the batch contracts to
-    * component roots, CC runs on the contracted graph, and the
-    * batch-sized deltas commit as one marked ingest. Returns
-    * (new nodes labeled, components merged).
-    */
   /** Cap under which [[append]]'s batch computation — contraction,
     * batch CC, the merge/label deltas and the commit-key hash — runs on
     * the driver over the collected batch edges (the pageRankLocal /
@@ -148,16 +136,12 @@ object GraphStore {
     */
   private[graft] val LocalBatchEdgeCap: Long = 1L << 20
 
-  /** Spark's `xxhash64(cast(x as string))` (seed 42) replayed on the
-    * driver — the commit-key content hash must not depend on which
-    * append path ran.
+  /** Ingest a batch of undirected edges (two node columns): committed
+    * labels for the touched nodes load (pruned), the batch contracts to
+    * component roots, CC runs on the contracted graph, and the
+    * batch-sized deltas commit as one marked ingest. Returns
+    * (new nodes labeled, components merged).
     */
-  private def xxhash64String(s: String): Long = {
-    val u = org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-  }
-
   def append(spark: SparkSession, dir: String, edges: DataFrame,
              nodeCol: String = "node",
              lsmBuckets: Int = StoreProtocol.WideLsmBuckets,
@@ -165,7 +149,7 @@ object GraphStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     val pinnedBuckets =
       if (committed.isEmpty) lsmBuckets
       else {
@@ -175,18 +159,7 @@ object GraphStore {
             s"got '$nodeCol'")
         bucketsOf(spark, dir) // recorded layout is authoritative
       }
-    // sweep orphans (the SpanStore append discipline) — keyed off MARKER
-    // presence, not visibility: a superseded-but-uncleaned key's dirs
-    // belong to the consolidation's cleanup, not this sweep
-    val marked = StoreProtocol.committedKeys(fs, root)
-    Seq("labels", "remap", "edges").foreach { t =>
-      val tdir = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      if (fs.exists(tdir))
-        fs.listStatus(tdir).map(_.getPath)
-          .filter(p => p.getName.startsWith("ingest=") &&
-            !marked.contains(p.getName.stripPrefix("ingest=")))
-          .foreach(p => fs.delete(p, true))
-    }
+    StoreProtocol.sweepUnmarked(fs, root, Tables)
     val Array(ea, eb) = edges.columns.take(2)
     val e = edges.select(col(ea).cast("long").as("a"), col(eb).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
@@ -259,11 +232,9 @@ object GraphStore {
     // key hash over the TOUCHED set, not the new nodes: a replayed or
     // merge-only batch still needs a deterministic key so a crashed
     // attempt's retry overwrites its own orphan
-    val contentHash = touched
-      .agg(format_string("%016x", bit_xor(xxhash64(col("node").cast("string")))))
-      .head().getString(0).take(12)
-    val gen = committed.map(genOf).sorted.lastOption.getOrElse(-1) + 1
-    val key = s"i${gen}_$contentHash"
+    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
+      touched.agg(StoreProtocol.contentHash(col("node").cast("string")))
+        .head().getString(0))
     // the three ingest tables derive from checkpointed frames and land
     // in disjoint dirs — overlap the writes (unmarked dirs stay
     // invisible whatever subset a crash leaves; marker after the barrier)
@@ -283,9 +254,7 @@ object GraphStore {
       Seq((nodeCol, lsmBuckets)).toDF("node_col", "lsm_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
     }
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "_commits"))
-    fs.create(new org.apache.hadoop.fs.Path(root, s"_commits/$key"), true)
-      .close()
+    StoreProtocol.commit(fs, root, key)
     (fresh, merges)
   }
 
@@ -295,8 +264,8 @@ object GraphStore {
     * bucket-pruned read; only its touched-bounded result collects, plus
     * the merge-sized remap chain), min-label union-find on the
     * contracted roots (clusterRepsLocal's semantics), the same
-    * merge/new-label split, and the identical commit key (xxhash64
-    * replayed via [[xxhash64String]]). Components and labels are
+    * merge/new-label split, and the identical commit key
+    * ([[StoreProtocol.localContentHash]]). Components and labels are
     * integer facts — no numeric grid to replicate.
     */
   private def appendLocal(spark: SparkSession, dir: String,
@@ -361,13 +330,10 @@ object GraphStore {
       .map(v => (v, fullMap.getOrElse(v, v))).toArray
     val merges = merged.length.toLong
     val fresh = newNodes.length.toLong
-    // same key as the distributed path: XOR of xxhash64 over the touched
-    // set (order-free), same generation numbering
-    var hx = 0L
-    touched.foreach(v => hx ^= xxhash64String(v.toString))
-    val contentHash = f"$hx%016x".take(12)
-    val gen = committed.map(genOf).sorted.lastOption.getOrElse(-1) + 1
-    val key = s"i${gen}_$contentHash"
+    // same key as the distributed path: the touched set's content hash,
+    // replayed on the driver
+    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
+      StoreProtocol.localContentHash(touched.iterator.map(_.toString)))
     val pairSchema = StructType(Seq(StructField("node", LongType),
       StructField("comp", LongType)))
     def pairDf(rows: Array[(Long, Long)], s: StructType): DataFrame = {
@@ -393,9 +359,7 @@ object GraphStore {
       Seq((nodeCol, lsmBuckets)).toDF("node_col", "lsm_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
     }
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "_commits"))
-    fs.create(new org.apache.hadoop.fs.Path(root, s"_commits/$key"), true)
-      .close()
+    StoreProtocol.commit(fs, root, key)
     (fresh, merges)
   }
 
@@ -406,7 +370,7 @@ object GraphStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     require(committed.nonEmpty, s"GraphStore.labels: nothing committed at $dir")
     val nodeCol = readMeta(spark, dir)
     resolve(readLabels(spark, dir, fs, committed, touched = None,
@@ -431,7 +395,7 @@ object GraphStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     require(committed.nonEmpty,
       s"GraphStore.coreness: nothing committed at $dir")
     val nodeCol = readMeta(spark, dir)
@@ -453,7 +417,7 @@ object GraphStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     require(committed.nonEmpty,
       s"GraphStore.componentOf: nothing committed at $dir")
     val nodeCol = readMeta(spark, dir)
@@ -498,8 +462,8 @@ object GraphStore {
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = fsOf(spark, root)
       StoreProtocol.heal(fs, root)
-      StoreProtocol.sweepSuperseded(fs, root, Seq("labels", "remap", "edges"))
-      val keys = committedKeys(fs, root)
+      StoreProtocol.sweepSuperseded(fs, root, Tables)
+      val keys = StoreProtocol.visibleKeys(fs, root)
       val before = keys.length
       if (before == 0) (0, 0)
       else {
@@ -509,15 +473,12 @@ object GraphStore {
           consolidate(spark, dir, None, Some(lsmBuckets))
           (before, 1)
         } else {
-          val (gens, flat) =
-            StoreProtocol.splitLsmLayout(fs, s"$dir/labels", keys)
-          sweepStaleRemaps(fs, dir, gens)
-          if (flat.isEmpty && gens.length <= maxGens)
-            (before, before)
-          else
-            (before,
-              consolidateIncremental(spark, dir, fs, root, keys, gens,
-                flat, pinned, maxGens))
+          val plan = StoreProtocol.planFold(fs, s"$dir/labels", keys,
+            maxGens, "r")
+          sweepStaleRemaps(fs, dir, plan.gens)
+          if (!plan.due) (before, before)
+          else (before,
+            consolidateIncremental(spark, dir, fs, root, keys, plan, pinned))
         }
       }
     }
@@ -539,19 +500,8 @@ object GraphStore {
     */
   private def consolidateIncremental(spark: SparkSession, dir: String,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      keys: Seq[String], gens0: Seq[String], flat: Seq[String],
-      buckets: Int, maxGens: Int): Int = {
-    val gens = gens0.sortBy(k => (genOf(k), k))
-    val keep = math.max(maxGens - 1, 0)
-    // tier folds retire the SMALLEST generations, never "the oldest" —
-    // the oldest is the original full base, and age-ordered folding
-    // would rewrite it every `keep` folds (StoreProtocol.tierFoldSelection)
-    val folded = StoreProtocol.tierFoldSelection(
-      fs, s"$dir/labels", gens, keep)
-    val retired = flat ++ folded
-    if (retired.isEmpty) return keys.length
-    val foldedSet = folded.toSet
-    val live = gens.filterNot(foldedSet)
+      keys: Seq[String], plan: StoreProtocol.FoldPlan, buckets: Int): Int = {
+    import plan.{flat, folded, key, live, retired}
     // the full visible chain, composed to one path-compressed table the
     // new generation carries for the LIVE older generations' unresolved
     // rows — when everything folds into the new generation there are
@@ -589,16 +539,13 @@ object GraphStore {
         // CURRENT roots so the new generation needs no chain at read time
         resolve(pieces.reduce(_.unionByName(_)), remaps)
     }
-    val gen = keys.map(genOf).max + 1
-    val key = s"r${gen}_${StoreProtocol.keyHash(retired)}"
     StoreProtocol.writeLsmBase(mergedLabels, "node",
       s"$dir/labels/ingest=$key", buckets)
     composed.filter(_ => composedCount > 0L).foreach(
       _.write.mode("overwrite").parquet(s"$dir/remap/ingest=$key"))
     spark.read.parquet(retired.map(k => s"$dir/edges/ingest=$k"): _*)
       .write.mode("overwrite").parquet(s"$dir/edges/ingest=$key")
-    StoreProtocol.commitIncremental(fs, root,
-      Seq("labels", "remap", "edges"), key, retired)
+    StoreProtocol.commitIncremental(fs, root, Tables, key, retired)
     // older generations' composed remaps are subsets of the new one (each
     // was composed from the chain visible at its creation, which the new
     // composition consumed) — redundant, and re-applying them is a no-op,
@@ -642,7 +589,7 @@ object GraphStore {
     val withRemap = gens.filter(k =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$dir/remap/ingest=$k")))
     if (withRemap.length > 1) {
-      val newest = withRemap.maxBy(k => (genOf(k), k))
+      val newest = withRemap.maxBy(k => (StoreProtocol.genOf(k), k))
       withRemap.filterNot(_ == newest).foreach(k =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/remap/ingest=$k"), true))
     }
@@ -669,7 +616,7 @@ object GraphStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     if (committed.isEmpty) return 0L
     val nodeCol = readMeta(spark, dir)
     val buckets = migrateBuckets.getOrElse(bucketsOf(spark, dir))
@@ -695,24 +642,21 @@ object GraphStore {
         survivors.select(col("a").as("id_a"), col("b").as("id_b")), "node")
       .select(col("node"), col("rep_id").as("comp"))
     val stats = nodes
-      .agg(count(lit(1)), format_string("%016x",
-        bit_xor(xxhash64(col("node").cast("string")))))
+      .agg(count(lit(1)), StoreProtocol.contentHash(col("node").cast("string")))
       .head()
     val tmp = new org.apache.hadoop.fs.Path(dir + "__consolidate")
     fs.delete(tmp, true)
     fs.mkdirs(tmp)
     if (stats.getLong(0) > 0L) {
-      val gen = committed.map(genOf).sorted.lastOption.getOrElse(-1) + 1
-      val key = s"r${gen}_${stats.getString(1).take(12)}"
+      val key = StoreProtocol.ingestKey("r", StoreProtocol.nextGen(committed),
+        stats.getString(1))
       StoreProtocol.writeLsmBase(relabeled, "node",
         s"$tmp/labels/ingest=$key", buckets)
       survivors.write.mode("overwrite").parquet(s"$tmp/edges/ingest=$key")
       import spark.implicits._
       Seq((nodeCol, buckets)).toDF("node_col", "lsm_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-      fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, "_commits"))
-      fs.create(new org.apache.hadoop.fs.Path(tmp, s"_commits/$key"), true)
-        .close()
+      StoreProtocol.commit(fs, tmp, key)
     }
     StoreProtocol.swapInto(fs, tmp, root, "GraphStore.consolidate")
     removed

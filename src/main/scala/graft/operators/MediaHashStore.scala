@@ -178,18 +178,9 @@ object MediaHashStore {
     df.repartitionByRange(nFiles, col(idCol))
       .sortWithinPartitions(col(idCol))
       .write.mode("overwrite").parquet(tmp.toString)
-    swapInto(fs, tmp, path, "compact")
+    StoreProtocol.swapInto(fs, tmp, path, "MediaHashStore.compact")
     (before, scanTree(path)._1)
   }
-
-  /** The `__old` temp-then-swap shared by [[compact]] and [[forget]]
-    * ([[StoreProtocol.swapInto]]); [[read]] heals a crash between the
-    * two renames.
-    */
-  private def swapInto(fs: org.apache.hadoop.fs.FileSystem,
-                       tmp: org.apache.hadoop.fs.Path,
-                       path: org.apache.hadoop.fs.Path, op: String): Unit =
-    StoreProtocol.swapInto(fs, tmp, path, s"MediaHashStore.$op")
 
   /** Retraction: drop every unit row whose `idCol` (the DOC id by
     * default — all of a retracted doc's frames leave together) appears
@@ -243,7 +234,7 @@ object MediaHashStore {
       val tmp = new org.apache.hadoop.fs.Path(s"$dir/hashes__forget")
       fs.delete(tmp, true)
       kept.write.mode("overwrite").parquet(tmp.toString)
-      swapInto(fs, tmp, path, "forget")
+      StoreProtocol.swapInto(fs, tmp, path, "MediaHashStore.forget")
     }
     removed
   }

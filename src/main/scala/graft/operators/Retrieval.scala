@@ -197,7 +197,7 @@ object Retrieval {
       // flat stats) must never be swept as "residue" — that is a
       // different store format, not a crashed un-commit
       require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")) &&
-          !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_commits")),
+          !StoreProtocol.hasCommitDir(fs, new org.apache.hadoop.fs.Path(dir)),
         s"forgetBm25: $dir holds an INCREMENTAL index — use forgetBm25Incremental")
       // a whole-corpus retraction crashed between its stats delete and
       // the table deletes leaves postings/doc_len/doc_freq bytes with no
@@ -416,7 +416,7 @@ object Retrieval {
     require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")),
       s"appendBm25Incremental: $dir holds a FLAT index (stats marker) — " +
         "build with buildBm25Incremental, or keep serving it via bm25TopKFromIndex")
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.committedKeys(fs, root)
     // the index's fpp is PINNED at the first ingest (meta carries it
     // beside the id column): every later append's blooms and the
     // consolidation's survivor bloom are built at the pinned rate, so an
@@ -495,27 +495,17 @@ object Retrieval {
     // generation → same key, so a crashed append's retry overwrites its
     // own orphan.
     val statsRow = docLen.agg(count(lit(1)), sum(col("dl")),
-      format_string("%016x", bit_xor(xxhash64(col(idCol).cast("string"))))).head()
+      StoreProtocol.contentHash(col(idCol).cast("string"))).head()
     val admitted = statsRow.getLong(0)
     if (admitted == 0L) return 0L
-    val contentHash = statsRow.getString(2).take(12)
-    val key = s"i${committed.length}_$contentHash"
-    // sweep orphans a crashed append may have stranded: an interleaved
-    // successful commit bumps the generation, so a retry writes a NEW
-    // key and the old unmarked partitions would otherwise linger until
-    // the next consolidation (r10 second-review catch) — unmarked dirs
-    // are invisible to readers, so deleting them here is free of races
-    // under the single-writer contract
-    Seq("postings", "doc_len", "doc_freq", "stats_parts", "id_bloom")
-      .foreach { t =>
-        val tdir = new org.apache.hadoop.fs.Path(s"$dir/$t")
-        if (fs.exists(tdir))
-          fs.listStatus(tdir) // blooms are files, tables are dirs — both swept
-            .map(_.getPath).filter { p =>
-              val k0 = p.getName.stripPrefix("ingest=")
-              p.getName.startsWith("ingest=") && k0 != key && !committed.contains(k0)
-            }.foreach(p => fs.delete(p, true))
-      }
+    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
+      statsRow.getString(2))
+    // a crashed append's orphans: an interleaved commit bumps the
+    // generation, so its retry writes a NEW key and the old unmarked
+    // partitions would otherwise linger until the next consolidation
+    // (r10 second-review catch)
+    StoreProtocol.sweepUnmarked(fs, root,
+      Seq("postings", "doc_len", "doc_freq", "stats_parts", "id_bloom"))
     // the five per-ingest artifacts derive from the two checkpointed
     // frames and land in DISJOINT subdirectories — independent legs, so
     // they overlap (guide §2.6: the sequential chain paid five
@@ -542,17 +532,11 @@ object Retrieval {
         writeBloom(fs, s"$dir/id_bloom/ingest=$key",
           docLen.select(xxhash64(col(idCol).cast("string")).as("__h"))
             .stat.bloomFilter("__h", admitted, fpp))))
-    // meta BEFORE the ingest marker (r10 second-review catch): marker
-    // first would wedge the index forever on a crash between the two —
-    // every entry point reads meta once a marker exists. Meta-without-
-    // marker merely replays as a fresh build (readers require a marked
-    // ingest), and the retry's key is unchanged (generation still 0),
-    // so it overwrites its own tables in place.
+    // meta BEFORE the ingest marker (StoreProtocol.commit)
     if (committed.isEmpty)
       Seq((idCol, fpp)).toDF("id_col", "bloom_fpp")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "_commits"))
-    fs.create(new org.apache.hadoop.fs.Path(root, s"_commits/$key"), true).close()
+    StoreProtocol.commit(fs, root, key)
     admitted
   }
 
@@ -571,10 +555,6 @@ object Retrieval {
     finally in.close()
   }
 
-  private def committedKeys(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Seq[String] =
-    StoreProtocol.committedKeys(fs, root)
-
   /** The incremental index's id-guard trade at this instant, for the
     * growth lane's audit rows (the RetrievePipeline.gateInfo twin):
     * (#committed ingests the guard would probe, pinned fpp). `readFpp`
@@ -585,7 +565,7 @@ object Retrieval {
                                   readFpp: Boolean): (Int, Double) = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.committedKeys(fs, root)
     if (committed.isEmpty) (0, 0.0)
     else (committed.length,
       if (readFpp) StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta"))
@@ -609,7 +589,7 @@ object Retrieval {
     require(fs.exists(metaPath),
       s"bm25TopKFromIncremental: no committed index at $dir (meta marker absent)")
     val idCol = spark.read.parquet(s"$dir/meta").head().getString(0)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.committedKeys(fs, root)
     require(committed.nonEmpty,
       s"bm25TopKFromIncremental: empty index at $dir (all ingests retracted)")
     def table(t: String) =
@@ -654,7 +634,7 @@ object Retrieval {
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       StoreProtocol.heal(fs, root)
-      val before = committedKeys(fs, root).length
+      val before = StoreProtocol.committedKeys(fs, root).length
       if (before <= 1) (before, before)
       else {
         consolidateBm25(spark, dir, None)
@@ -673,7 +653,7 @@ object Retrieval {
     require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")),
       s"forgetBm25Incremental/compact: $dir holds a FLAT index (stats " +
         "marker) — use forgetBm25")
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.committedKeys(fs, root)
     if (committed.isEmpty) return 0L
     val metaDf = spark.read.parquet(s"$dir/meta")
     val metaRow = metaDf.head()
@@ -698,8 +678,7 @@ object Retrieval {
     }
     val docLen = keep(table("doc_len"))
     val stats = docLen.agg(count(lit(1)), sum(col("dl")),
-      format_string("%016x", bit_xor(xxhash64(col(idCol).cast("string")))))
-      .head()
+      StoreProtocol.contentHash(col(idCol).cast("string"))).head()
     val survivors = stats.getLong(0)
     val removedTotal = // docs before minus after (stats partials are exact)
       table("stats_parts").collect().map(_.getLong(0)).sum - survivors
@@ -708,7 +687,8 @@ object Retrieval {
     fs.delete(tmp, true)
     fs.mkdirs(tmp) // all-retracted leaves it empty: the swap un-commits
     if (survivors > 0L) {
-      val key = s"r${committed.length}_${stats.getString(2).take(12)}"
+      val key = StoreProtocol.ingestKey("r", StoreProtocol.nextGen(committed),
+        stats.getString(2))
       keep(table("postings")).write.mode("overwrite")
         .parquet(s"$tmp/postings/ingest=$key")
       docLen.write.mode("overwrite").parquet(s"$tmp/doc_len/ingest=$key")
@@ -733,8 +713,7 @@ object Retrieval {
           .stat.bloomFilter("__h", survivors, fpp))
       spark.read.parquet(s"$dir/meta")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-      fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, "_commits"))
-      fs.create(new org.apache.hadoop.fs.Path(tmp, s"_commits/$key"), true).close()
+      StoreProtocol.commit(fs, tmp, key)
     }
     // all retracted → tmp stays empty: the swap un-commits the index
     StoreProtocol.swapInto(fs, tmp, root, "consolidateBm25")

@@ -156,10 +156,14 @@ object Similarity {
     * scales to any corpus size. (The alternative — `max_by` over
     * crossJoin(broadcast(pivots)) — avoids the window-shuffle too, but its
     * struct aggregation buffer plans as SortAggregate: a map-side sort of
-    * N×nlist scored rows that this formulation never produces.)
+    * N×nlist scored rows that this formulation never produces.) Rows
+    * are sorted by cell id: a persisted pivot table reads back in no fixed
+    * order, and the literal is part of the plan, which must not change
+    * from run to run.
     */
   private def pivotLiteral(pivots: DataFrame): Column = {
-    val rows = pivots.collect() // nlist rows — bounded by construction
+    // nlist rows — bounded by construction
+    val rows = pivots.collect().sortBy(_.getLong(0))
     array(rows.toIndexedSeq.map { r =>
       struct(lit(r.getLong(0)).as("c"), typedLit(r.getSeq[Float](1)).as("pv"))
     }: _*)

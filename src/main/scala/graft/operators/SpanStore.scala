@@ -73,12 +73,8 @@ object SpanStore {
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Reader-visible ingests: committed minus incremental-consolidation
-    * retirees ([[StoreProtocol.visibleKeys]]).
-    */
-  private def committedKeys(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Seq[String] =
-    StoreProtocol.visibleKeys(fs, root)
+  /** The per-ingest tables; they share each ingest's commit key. */
+  private val Tables = Seq("span_docs", "doc_ids")
 
   private def metaOf(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/meta")
@@ -142,28 +138,16 @@ object SpanStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     if (committed.nonEmpty) {
       val (storedId, storedK) = readMeta(spark, dir)
       require(storedId == idCol && storedK == k,
         s"SpanStore.append: store at $dir is keyed ($storedId, k=$storedK), " +
           s"got ($idCol, k=$k) — span hashes across k values do not mix")
     }
-    // sweep orphans a crashed append may have stranded (an interleaved
-    // successful commit bumps the generation, so a retry writes a NEW
-    // key; unmarked dirs are invisible to readers — deleting them is
-    // race-free under the single-writer contract). The sweep keys off
-    // MARKER presence, not visibility: a superseded-but-uncleaned key's
-    // dirs belong to the consolidation's cleanup, not this sweep.
-    val marked = StoreProtocol.committedKeys(fs, root)
-    Seq("span_docs", "doc_ids").foreach { t =>
-      val tdir = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      if (fs.exists(tdir))
-        fs.listStatus(tdir).map(_.getPath)
-          .filter(p => p.getName.startsWith("ingest=") &&
-            !marked.contains(p.getName.stripPrefix("ingest=")))
-          .foreach(p => fs.delete(p, true))
-    }
+    // a crashed append's orphans (an interleaved commit bumps the
+    // generation, so its retry writes a NEW key)
+    StoreProtocol.sweepUnmarked(fs, root, Tables)
     val incoming0 = docs.select(col(idCol), col(textCol))
     val incoming =
       if (committed.isEmpty) incoming0
@@ -184,14 +168,12 @@ object SpanStore {
       case None => Dedup.spanShingles(incoming, textCol, idCol, k)
     }
     val stats = admittedIds
-      .agg(count(lit(1)),
-        format_string("%016x", bit_xor(xxhash64(col(idCol).cast("string")))))
+      .agg(count(lit(1)), StoreProtocol.contentHash(col(idCol).cast("string")))
       .head()
     val admitted = stats.getLong(0)
     if (admitted == 0L) return 0L
-    // deterministic commit key: same batch content + same generation →
-    // same key, so a crashed append's retry overwrites its own orphan
-    val key = s"i${committed.length}_${stats.getString(1).take(12)}"
+    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
+      stats.getString(1))
     // disjoint ingest dirs off materialized inputs — overlap the writes
     // (unmarked dirs stay invisible whatever subset a crash leaves)
     graft.Par.awaitAll(
@@ -206,9 +188,7 @@ object SpanStore {
       Seq((idCol, k, lsmBuckets)).toDF("id_col", "k", "lsm_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
     }
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "_commits"))
-    fs.create(new org.apache.hadoop.fs.Path(root, s"_commits/$key"), true)
-      .close()
+    StoreProtocol.commit(fs, root, key)
     admitted
   }
 
@@ -231,7 +211,7 @@ object SpanStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     val pinnedBuckets =
       if (committed.isEmpty) StoreProtocol.DefaultLsmBuckets
       else {
@@ -329,8 +309,8 @@ object SpanStore {
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = fsOf(spark, root)
       StoreProtocol.heal(fs, root)
-      StoreProtocol.sweepSuperseded(fs, root, Seq("span_docs", "doc_ids"))
-      val keys = committedKeys(fs, root)
+      StoreProtocol.sweepSuperseded(fs, root, Tables)
+      val keys = StoreProtocol.visibleKeys(fs, root)
       val before = keys.length
       if (before == 0) (0, 0)
       else {
@@ -340,14 +320,10 @@ object SpanStore {
           consolidate(spark, dir, None, Some(lsmBuckets))
           (before, 1)
         } else {
-          val (gens, flat) =
-            StoreProtocol.splitLsmLayout(fs, s"$dir/span_docs", keys)
-          if (flat.isEmpty && gens.length <= maxGens)
-            (before, before)
-          else
-            (before,
-              consolidateIncremental(spark, dir, fs, root, keys, gens,
-                flat, pinned, maxGens))
+          val plan = StoreProtocol.planFold(fs, s"$dir/span_docs", keys,
+            maxGens, "r")
+          if (!plan.due) (before, before)
+          else (before, consolidateIncremental(spark, dir, fs, root, plan, pinned))
         }
       }
     }
@@ -365,19 +341,8 @@ object SpanStore {
     */
   private def consolidateIncremental(spark: SparkSession, dir: String,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      keys: Seq[String], gens0: Seq[String], flat: Seq[String],
-      buckets: Int, maxGens: Int): Int = {
-    val gens = gens0.sortBy(k => (StoreProtocol.genOf(k), k))
-    val keep = math.max(maxGens - 1, 0)
-    // tier folds retire the SMALLEST generations, never "the oldest" —
-    // the oldest is the original full base, and age-ordered folding
-    // would rewrite it every `keep` folds (StoreProtocol.tierFoldSelection)
-    val folded = StoreProtocol.tierFoldSelection(
-      fs, s"$dir/span_docs", gens, keep)
-    val retired = flat ++ folded
-    if (retired.isEmpty) return keys.length
-    val foldedSet = folded.toSet
-    val live = gens.filterNot(foldedSet)
+      plan: StoreProtocol.FoldPlan, buckets: Int): Int = {
+    import plan.{flat, folded, key, retired}
     val tail =
       if (flat.isEmpty) None
       else Some(spark.read
@@ -403,17 +368,11 @@ object SpanStore {
     }
     val carried = spark.read
       .parquet(retired.map(k => s"$dir/doc_ids/ingest=$k"): _*)
-    // deterministic key: same retired set + same generation → same key,
-    // so a crashed merge's retry overwrites its own orphan (no data
-    // read needed — the retired names already identify the content)
-    val gen = keys.map(StoreProtocol.genOf).max + 1
-    val key = s"r${gen}_${StoreProtocol.keyHash(retired)}"
     StoreProtocol.writeLsmBase(merged, "shingle",
       s"$dir/span_docs/ingest=$key", buckets)
     carried.write.mode("overwrite").parquet(s"$dir/doc_ids/ingest=$key")
-    StoreProtocol.commitIncremental(fs, root, Seq("span_docs", "doc_ids"),
-      key, retired)
-    live.length + 1
+    StoreProtocol.commitIncremental(fs, root, Tables, key, retired)
+    plan.live.length + 1
   }
 
   /** Retract documents: their span counts decrement EXACTLY (recomputed
@@ -439,7 +398,7 @@ object SpanStore {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     StoreProtocol.heal(fs, root)
-    val committed = committedKeys(fs, root)
+    val committed = StoreProtocol.visibleKeys(fs, root)
     if (committed.isEmpty) return 0L
     val (idCol, k) = readMeta(spark, dir)
     val buckets =
@@ -490,15 +449,15 @@ object SpanStore {
       case None => table("doc_ids")
     }
     val stats = survivorIds
-      .agg(count(lit(1)),
-        format_string("%016x", bit_xor(xxhash64(col(idCol).cast("string")))))
+      .agg(count(lit(1)), StoreProtocol.contentHash(col(idCol).cast("string")))
       .head()
     val survivors = stats.getLong(0)
     val tmp = new org.apache.hadoop.fs.Path(dir + "__consolidate")
     fs.delete(tmp, true)
     fs.mkdirs(tmp) // all-retracted leaves it empty: the swap un-commits
     if (survivors > 0L) {
-      val key = s"r${committed.length}_${stats.getString(1).take(12)}"
+      val key = StoreProtocol.ingestKey("r", StoreProtocol.nextGen(committed),
+        stats.getString(1))
       // the consolidated base lands BUCKETED (bucket = shingle mod the
       // store's pinned count) so probes prune it by construction; a
       // migration re-pins the meta in the SAME swap as the new layout
@@ -508,9 +467,7 @@ object SpanStore {
       metaOf(spark, dir).select("id_col", "k")
         .withColumn("lsm_buckets", lit(buckets))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-      fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, "_commits"))
-      fs.create(new org.apache.hadoop.fs.Path(tmp, s"_commits/$key"), true)
-        .close()
+      StoreProtocol.commit(fs, tmp, key)
     }
     StoreProtocol.swapInto(fs, tmp, root, "SpanStore.consolidate")
     removed

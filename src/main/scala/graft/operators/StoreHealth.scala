@@ -81,19 +81,12 @@ object StoreHealth {
       if (fs.exists(sup)) fs.listStatus(sup).length else 0
     }
     // layout detection by the protocol's own table names: the hash-keyed
-    // LSM stores split flat/bucketed on their primary table; the gate
-    // stores split on gate_ids presence
-    val spanT = fs.exists(new Path(root, "span_docs"))
-    val labelT = fs.exists(new Path(root, "labels"))
-    val gateT = fs.exists(new Path(root, "gate_ids"))
+    // LSM stores split flat/bucketed on their primary table, every other
+    // store on its gate_ids base (absent: every ingest is flat)
+    val lsmTable = Seq("span_docs", "labels")
+      .find(t => fs.exists(new Path(root, t))).getOrElse("gate_ids")
     val (gens, flat) =
-      if (spanT) StoreProtocol.splitLsmLayout(fs, s"$dir/span_docs", visible)
-      else if (labelT) StoreProtocol.splitLsmLayout(fs, s"$dir/labels", visible)
-      else if (gateT || fs.exists(new Path(root, "docs"))) {
-        val (idx, fl) = visible.partition(k =>
-          fs.exists(new Path(s"$dir/gate_ids/ingest=$k")))
-        (idx, fl)
-      } else (Nil, visible)
+      StoreProtocol.splitLsmLayout(fs, s"$dir/$lsmTable", visible)
     val remapDepth = {
       val r = new Path(root, "remap")
       if (!fs.exists(r)) 0

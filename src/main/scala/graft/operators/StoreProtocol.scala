@@ -21,6 +21,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * a concurrent swap — the writers that tolerate the race document it
   * (Warehouse.recoverStranded keeps its own variant for that reason:
   * its overwrite retries until the writer wins).
+  *
+  * The marker protocol (SpanStore, GraphStore, the incremental BM25
+  * index, the streaming gate stores) lives here too, write half and
+  * read half, so every protocol mutation has one implementation:
+  *
+  *  - keys: [[contentHash]] (and its driver twin [[localContentHash]])
+  *    hashes an ingest's ids, [[nextGen]] picks the generation,
+  *    [[ingestKey]] joins them; [[keyHash]] names a fold's output;
+  *  - append: [[sweepUnmarked]] clears a crashed attempt's orphans,
+  *    [[commit]] writes the marker that makes an ingest visible;
+  *  - fold: [[planFold]] chooses what a tier fold retires
+  *    ([[tierFoldSelection]]), [[commitIncremental]] flips it live,
+  *    [[sweepSuperseded]] / [[cleanupRetired]] finish its cleanup;
+  *  - swap: [[swapInto]] and [[heal]];
+  *  - read: [[committedKeys]] (marked), [[visibleKeys]] (marked minus
+  *    superseded), [[hasCommitDir]], [[genOf]], and the LSM bucket pair
+  *    ([[readLsm]], [[writeLsmBase]]).
   */
 private[graft] object StoreProtocol {
 
@@ -31,16 +48,53 @@ private[graft] object StoreProtocol {
     ()
   }
 
-  /** The committed ingest keys of a marker-protocol store (`_commits/`
-    * entries under `root`) — shared by the incremental BM25 index and
-    * the span store (one implementation, the heal/swap consolidation
-    * argument applied to the marker read).
+  private def commitsDir(root: Path) = new Path(root, "_commits")
+
+  /** The committed ingest keys of a marker-protocol store: the entries
+    * under `root/_commits`, whether or not a later fold superseded them
+    * (readers want [[visibleKeys]]).
     */
   def committedKeys(fs: FileSystem, root: Path): Seq[String] = {
-    val commitsDir = new Path(root, "_commits")
-    if (!fs.exists(commitsDir)) Nil
-    else fs.listStatus(commitsDir).toSeq.map(_.getPath.getName)
+    val dir = commitsDir(root)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+  }
+
+  /** Whether `root` has a commit-marker directory at all: the layout
+    * probe that tells a marker-protocol store from a flat one.
+    */
+  def hasCommitDir(fs: FileSystem, root: Path): Boolean =
+    fs.exists(commitsDir(root))
+
+  /** Make ingest `key` visible: create `root/_commits/<key>`. Every data
+    * dir of the ingest must be fully written first: the marker is the
+    * commit. On a store's FIRST commit its meta goes before the marker
+    * too: every entry point reads meta once a marker exists, so a crash
+    * between a marker and a missing meta would wedge the store, while a
+    * meta without a marker just replays as a fresh first ingest (the
+    * retry mints the same key and overwrites its own dirs).
+    */
+  def commit(fs: FileSystem, root: Path, key: String): Unit = {
+    fs.mkdirs(commitsDir(root))
+    fs.create(new Path(commitsDir(root), key), true).close()
+  }
+
+  /** Delete every `ingest=<k>` entry of `tables` (dirs, and files such
+    * as the BM25 blooms) whose `k` has no marker: the debris of a
+    * crashed append. Keys off marker PRESENCE, not visibility: a
+    * superseded-but-uncleaned key's dirs belong to its fold's cleanup.
+    * Unmarked dirs are invisible to readers, so under the single-writer
+    * contract the sweep cannot race one.
+    */
+  def sweepUnmarked(fs: FileSystem, root: Path, tables: Seq[String]): Unit = {
+    val marked = committedKeys(fs, root).toSet
+    tables.map(new Path(root, _)).filter(fs.exists).foreach { t =>
+      fs.listStatus(t).map(_.getPath)
+        .filter(p => p.getName.startsWith("ingest=") &&
+          !marked.contains(p.getName.stripPrefix("ingest=")))
+        .foreach(fs.delete(_, true))
+    }
   }
 
   /** The generation number of an ingest key — the digits after the
@@ -52,6 +106,44 @@ private[graft] object StoreProtocol {
   def genOf(key: String): Int = {
     val d = key.dropWhile(!_.isDigit).takeWhile(_.isDigit)
     if (d.isEmpty) -1 else d.toInt
+  }
+
+  /** The generation a new key over `keys` takes: one past the highest,
+    * 0 for an empty store. Never the key COUNT: a fold or a forget
+    * shrinks the count, and a count-based generation re-mints numbers
+    * the store has already used.
+    */
+  def nextGen(keys: Seq[String]): Int =
+    if (keys.isEmpty) 0 else keys.map(genOf).max + 1
+
+  /** An ingest key: `<prefix><gen>_<12 hex of hash>`. Deterministic, so
+    * a crashed write's retry (same content, same generation) overwrites
+    * its own orphan. Streaming batch keys pass the batch id as `gen`
+    * with an empty prefix: a re-delivered batch must mint the same key.
+    */
+  def ingestKey(prefix: String, gen: Long, hash: String): String =
+    s"$prefix${gen}_${hash.take(12)}"
+
+  /** The order-free content hash of an ingest's ids: 16 hex of the XOR
+    * of every row's `xxhash64(ids)`. An aggregate with O(1) state, so it
+    * rides the caller's own single aggregate over the ingest (hashing a
+    * `collect_list` instead would funnel every id through one task).
+    */
+  def contentHash(ids: Column): Column =
+    format_string("%016x", bit_xor(xxhash64(ids)))
+
+  /** [[contentHash]] over `cast(id as string)` values, replayed on the
+    * driver (Spark's xxhash64, seed 42): a driver-local writer mints the
+    * same key as its distributed twin.
+    */
+  def localContentHash(ids: Iterator[String]): String = {
+    var h = 0L
+    ids.foreach { s =>
+      val u = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      h ^= org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
+    }
+    f"$h%016x"
   }
 
   // ------------------------------------- incremental-consolidation flip
@@ -109,8 +201,7 @@ private[graft] object StoreProtocol {
     require(retired.nonEmpty, "commitIncremental: nothing to retire")
     fs.mkdirs(supersedesDir(root))
     writeTextFile(fs, new Path(supersedesDir(root), newKey), retired)
-    fs.mkdirs(new Path(root, "_commits"))
-    fs.create(new Path(root, s"_commits/$newKey"), true).close()
+    commit(fs, root, newKey)
     cleanupRetired(fs, root, tables, newKey, retired)
   }
 
@@ -123,7 +214,7 @@ private[graft] object StoreProtocol {
   def cleanupRetired(fs: FileSystem, root: Path, tables: Seq[String],
                      newKey: String, retired: Seq[String]): Unit = {
     retired.foreach { k =>
-      fs.delete(new Path(root, s"_commits/$k"), false)
+      fs.delete(new Path(commitsDir(root), k), false)
       // a retired key may carry its own (already-applied) note
       fs.delete(new Path(supersedesDir(root), k), false)
     }
@@ -176,6 +267,39 @@ private[graft] object StoreProtocol {
       val len = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
       (len, genOf(k), k)
     }.sorted.take(gens.length - keep).map(_._3)
+
+  /** A tier fold's plan over a store's visible keys ([[planFold]]):
+    * `gens` are the bucketed generations in (generation, key) order,
+    * `flat` the append tail, `folded` the generations the fold merges
+    * back in, `key` the new generation's key.
+    */
+  final case class FoldPlan(gens: Seq[String], flat: Seq[String],
+                            folded: Seq[String], due: Boolean, key: String) {
+    /** The keys the new generation replaces: the flat tail first. */
+    def retired: Seq[String] = flat ++ folded
+    /** The generations that survive the fold untouched. */
+    def live: Seq[String] = gens.filterNot(folded.toSet)
+  }
+
+  /** Plan an incremental consolidation of the keys `visible`, laid out
+    * as `tableDir`'s ingests ([[splitLsmLayout]]). A fold is due when
+    * there is a flat tail or more than `maxGens` generations; it then
+    * retires the whole tail plus the SMALLEST generations past
+    * `maxGens − 1` ([[tierFoldSelection]]), under the key
+    * `<prefix><nextGen>_<keyHash(retired)>`. Reads listings and sizes
+    * only; writes nothing.
+    */
+  def planFold(fs: FileSystem, tableDir: String, visible: Seq[String],
+               maxGens: Int, prefix: String): FoldPlan = {
+    val (bucketed, flat) = splitLsmLayout(fs, tableDir, visible)
+    val gens = bucketed.sortBy(k => (genOf(k), k))
+    val due = flat.nonEmpty || gens.length > maxGens
+    val folded =
+      if (due) tierFoldSelection(fs, tableDir, gens, math.max(maxGens - 1, 0))
+      else Nil
+    FoldPlan(gens, flat, folded, due,
+      ingestKey(prefix, nextGen(visible), keyHash(flat ++ folded)))
+  }
 
   /** Deterministic 12-hex content hash of a key set — the suffix of an
     * incremental consolidation's generation key (same retired set + same

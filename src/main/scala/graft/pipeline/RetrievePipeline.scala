@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{AnnIndex, CorpusOps, Lease, Retrieval, Similarity, TextAnalysis}
+import graft.operators.{AnnIndex, CorpusOps, Lease, Retrieval, Similarity,
+  StoreProtocol, TextAnalysis}
 
 /** End-to-end hybrid retrieval over a document corpus — the composition
   * the individual operators exist for, as one runnable lifecycle (the
@@ -238,14 +239,6 @@ object RetrievePipeline {
         col("rrf"), col("n_sources"))
   }
 
-  /** Heal a [[forget]] table swap crashed between its two renames (the
-    * table parked at `<table>__old`) — run before reading `chunks` or
-    * `vectors` outside the build path.
-    */
-  private def healSwap(fs: org.apache.hadoop.fs.FileSystem,
-                       path: org.apache.hadoop.fs.Path): Unit =
-    graft.operators.StoreProtocol.heal(fs, path)
-
   /** Read a chunk/vector table: the build writes flat files, [[append]]
     * commits batch SUBDIRECTORIES (the staged-rename protocol) — both
     * are plain leaf-file layouts, no partition inference wanted (the
@@ -272,12 +265,6 @@ object RetrievePipeline {
   }
 
   // ------------------------------------------------- doc-id bloom guard
-
-  /** The stack's pinned bloom fpp from `meta`; pre-pinning stacks (no
-    * bloom_fpp column) read as the historical 1e-4 default.
-    */
-  private def pinnedFpp(meta: DataFrame): Double =
-    graft.operators.StoreProtocol.pinnedFpp(meta)
 
   /** The chunk store's committed PARTS — the grain the doc-id blooms
     * are keyed on: the build/compact/forget flat files under the name
@@ -310,7 +297,7 @@ object RetrievePipeline {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))) (0, 0.0)
     else (chunkParts(fs, dir).length,
-      if (readFpp) pinnedFpp(spark.read.parquet(s"$dir/meta")) else 0.0)
+      if (readFpp) StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta")) else 0.0)
   }
 
   /** One doc-id bloom over `chunksDf`'s distinct parent docs, written
@@ -440,10 +427,10 @@ object RetrievePipeline {
     val meta = metaDf.head()
     val (dim, salt, chunkTokens, stride) =
       (meta.getInt(0), meta.getString(1), meta.getInt(2), meta.getInt(3))
-    val fpp = pinnedFpp(metaDf)
-    healSwap(fs, new org.apache.hadoop.fs.Path(s"$dir/chunks"))
-    healSwap(fs, new org.apache.hadoop.fs.Path(s"$dir/vectors"))
-    graft.operators.StoreProtocol.heal(fs,
+    val fpp = StoreProtocol.pinnedFpp(metaDf)
+    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/chunks"))
+    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/vectors"))
+    StoreProtocol.heal(fs,
       new org.apache.hadoop.fs.Path(s"$dir/ann/corpus"))
     // the batch's doc-id RANGE first: it is (a) the id-space
     // precondition, moved ahead of every store read so a bad batch
@@ -505,7 +492,7 @@ object RetrievePipeline {
     // checkpointed chunks for a second pass); the hash column is only
     // read when nChunks > 0, so the empty-batch null never surfaces
     val stats = chunks.agg(count(lit(1)), max(col("chunk_idx")),
-      format_string("%016x", bit_xor(xxhash64(col("chunk_id"))))).head()
+      StoreProtocol.contentHash(col("chunk_id"))).head()
     val nChunks = stats.getLong(0)
     if (nChunks == 0L)
       return Seq(Stage("chunks", 0L), Stage("bm25_chunks", 0L),
@@ -624,7 +611,7 @@ object RetrievePipeline {
       s"RetrievePipeline.compact: no committed build at $dir (meta marker absent)")
     Seq("chunks", "vectors").foreach { table =>
       val path = new org.apache.hadoop.fs.Path(s"$dir/$table")
-      healSwap(fs, path)
+      StoreProtocol.heal(fs, path)
       val tmp = new org.apache.hadoop.fs.Path(s"$dir/${table}__compact")
       fs.delete(tmp, true)
       readTable(spark, path.toString)
@@ -640,12 +627,12 @@ object RetrievePipeline {
       // heals from the part's files (loadDocBlooms invariant).
       if (table == "chunks")
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/doc_blooms"), true)
-      graft.operators.StoreProtocol.swapInto(fs, tmp, path,
+      StoreProtocol.swapInto(fs, tmp, path,
         "RetrievePipeline.compact")
       if (table == "chunks") {
         val folded = readTable(spark, path.toString)
         writePartBloom(fs, dir, "base", folded, folded.count(),
-          pinnedFpp(spark.read.parquet(s"$dir/meta")))
+          StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta")))
       }
     }
     if (!bm25IsFlat(spark, dir))
@@ -696,8 +683,8 @@ object RetrievePipeline {
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(metaPath),
       s"RetrievePipeline.forget: no committed build at $dir (meta marker absent)")
-    healSwap(fs, new org.apache.hadoop.fs.Path(s"$dir/chunks"))
-    healSwap(fs, new org.apache.hadoop.fs.Path(s"$dir/vectors"))
+    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/chunks"))
+    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/vectors"))
     val chunks = readTable(spark, s"$dir/chunks")
     // renamed join key: the chunk store carries the caller's own doc-id
     // column, and a bare `doc_id` reference would be ambiguous
@@ -721,7 +708,7 @@ object RetrievePipeline {
       readTable(spark, path.toString)
         .join(drop, Seq("chunk_id"), "left_anti")
         .write.mode("overwrite").parquet(tmp.toString)
-      graft.operators.StoreProtocol.swapInto(fs, tmp, path,
+      StoreProtocol.swapInto(fs, tmp, path,
         "RetrievePipeline.forget")
     }
     // chunks LAST — the drop set derives from them (see the scaladoc's
@@ -740,7 +727,7 @@ object RetrievePipeline {
     swapTable("chunks")
     val survivors = readTable(spark, s"$dir/chunks")
     writePartBloom(fs, dir, "base", survivors, survivors.count(),
-      pinnedFpp(spark.read.parquet(s"$dir/meta")))
+      StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta")))
     removed
   }
 
@@ -765,7 +752,7 @@ object RetrievePipeline {
     */
   def fetchChunks(spark: SparkSession, dir: String,
                   results: DataFrame, isinCap: Long = 1L << 16): DataFrame = {
-    healSwap(new org.apache.hadoop.fs.Path(s"$dir/chunks")
+    StoreProtocol.heal(new org.apache.hadoop.fs.Path(s"$dir/chunks")
         .getFileSystem(spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(s"$dir/chunks"))
     // pin the result before it feeds the count, the id collect/semi-join

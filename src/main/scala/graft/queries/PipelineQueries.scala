@@ -2903,17 +2903,14 @@ ORDER BY doc_id""")
     }
     val gate = s"$base/gate"
     val gateLeg = graft.Par.run {
-      val fs = new org.apache.hadoop.fs.Path(gate)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val root = new org.apache.hadoop.fs.Path(gate)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text")
         .write.parquet(s"$gate/docs/ingest=0_aa")
       Seq((3L, "z")).toDF("doc_id", "text")
         .write.parquet(s"$gate/docs/ingest=1_bb")
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$gate/_commits"))
-      fs.create(new org.apache.hadoop.fs.Path(s"$gate/_commits/0_aa"), true)
-        .close()
-      fs.create(new org.apache.hadoop.fs.Path(s"$gate/_commits/1_bb"), true)
-        .close()
+      Seq("0_aa", "1_bb").foreach(
+        graft.operators.StoreProtocol.commit(fs, root, _))
       graft.streaming.IncrementalStream.compactDecontamCorpus(s, gate)
     }
     graft.Par.awaitAll(spanLeg, graphLeg, gateLeg)

@@ -342,9 +342,9 @@ object IncrementalStream {
         graft.operators.Lease.withLease(sp, outDir, s"decontam:$runKey") {
           val root = new org.apache.hadoop.fs.Path(outDir)
           val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-          healSwap(fs, root) // a compaction crashed mid-swap parks the
-                             // whole corpus at __old — restore it first
-          val commitsDir = new org.apache.hadoop.fs.Path(root, "_commits")
+          // a compaction crashed mid-swap parks the whole corpus at
+          // __old — restore it first
+          graft.operators.StoreProtocol.heal(fs, root)
           val committed: Seq[String] =
             graft.operators.StoreProtocol.visibleKeys(fs, root)
           var pinned = List.empty[DataFrame]
@@ -363,14 +363,9 @@ object IncrementalStream {
                 .select(col(idCol))
               val accepted = pin(batch.join(dirty, Seq(idCol), "left_anti"))
               if (!accepted.isEmpty) {
-                val contentHash = accepted
-                  .agg(format_string("%016x",
-                    bit_xor(xxhash64(col(idCol).cast("string")))))
-                  .head().getString(0).take(12)
-                val key = s"${batchId}_$contentHash"
+                val key = batchKey(accepted, batchId, idCol)
                 accepted.write.mode("overwrite").parquet(s"$outDir/docs/ingest=$key")
-                fs.mkdirs(commitsDir)
-                fs.create(new org.apache.hadoop.fs.Path(commitsDir, key), true).close()
+                graft.operators.StoreProtocol.commit(fs, root, key)
               }
             }
             // schedule OR depth trigger (the spanIngest policy): fold the
@@ -378,7 +373,7 @@ object IncrementalStream {
             // the flat tail outgrows the bound
             if ((compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
                 || (compactWhenUncompactedExceeds > 0 &&
-                  uncompactedGateIngests(sp, outDir)
+                  uncompactedIngests(sp, outDir, "gate_ids")
                     > compactWhenUncompactedExceeds))
               compactDecontamCorpus(sp, outDir, idCol)
           } finally pinned.foreach(_.unpersist())
@@ -429,9 +424,9 @@ object IncrementalStream {
           val hadoopConf = sp.sparkContext.hadoopConfiguration
           val root = new org.apache.hadoop.fs.Path(stateDir)
           val fs = root.getFileSystem(hadoopConf)
-          healSwap(fs, root) // a forgetFuzzyState crashed mid-swap parks
-                             // the whole state at __old — restore it first
-          val commitsDir = new org.apache.hadoop.fs.Path(root, "_commits")
+          // a forgetFuzzyState crashed mid-swap parks the whole state
+          // at __old — restore it first
+          graft.operators.StoreProtocol.heal(fs, root)
           val committed: Seq[String] =
             graft.operators.StoreProtocol.visibleKeys(fs, root)
           def partDirs(table: String): Seq[String] =
@@ -479,18 +474,7 @@ object IncrementalStream {
               val accepted = pin(batch
                 .join(corpusHit.union(internalDrop).distinct(), Seq(idCol), "left_anti"))
               if (!accepted.isEmpty) {
-                // commit key: stable under same-checkpoint re-delivery (same
-                // batchId + content -> overwrite in place), collision-free
-                // across fresh-checkpoint re-reads (content hash differs).
-                // Order-free O(1)-state hash: bit_xor of per-id xxhash64 —
-                // the collect_list alternative funnels every accepted id
-                // into ONE row (tens of MB through one task on a large
-                // micro-batch) for the same 48–64-bit collision resistance
-                val contentHash = accepted
-                  .agg(format_string("%016x",
-                    bit_xor(xxhash64(col(idCol).cast("string")))))
-                  .head().getString(0).take(12)
-                val key = s"${batchId}_$contentHash"
+                val key = batchKey(accepted, batchId, idCol)
                 val acceptedIds = accepted.select(col(idCol))
                 def acceptedOnly(df: DataFrame) =
                   df.join(acceptedIds, Seq(idCol), "left_semi")
@@ -501,14 +485,13 @@ object IncrementalStream {
                 acceptedOnly(bSh).select(col(idCol), col("shingle"))
                   .write.mode("overwrite").parquet(s"$stateDir/shingles/ingest=$key")
                 accepted.write.mode("overwrite").parquet(s"$stateDir/docs/ingest=$key")
-                fs.mkdirs(commitsDir)
-                fs.create(new org.apache.hadoop.fs.Path(commitsDir, key), true).close()
+                graft.operators.StoreProtocol.commit(fs, root, key)
               }
             }
             // schedule OR depth trigger (the spanIngest policy)
             if ((compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
                 || (compactWhenUncompactedExceeds > 0 &&
-                  uncompactedGateIngests(sp, stateDir)
+                  uncompactedIngests(sp, stateDir, "gate_ids")
                     > compactWhenUncompactedExceeds))
               compactFuzzyState(sp, stateDir, idCol)
           } finally {
@@ -522,18 +505,6 @@ object IncrementalStream {
       }
       .start()
 
-  /** Heal a whole-directory temp-then-swap crashed between its two
-    * renames: `path` gone, `path__old` holding the complete pre-swap
-    * contents — rename it back (the SketchStore/AnnIndex discipline,
-    * shared by [[forgetFuzzyState]] and the `fuzzyDedupIngest` reader).
-    */
-  /** The audit tables' run identity: the stream's checkpoint location,
-    * QUALIFIED against its filesystem (scheme + authority + absolute
-    * path) so the same checkpoint spelled differently — relative vs
-    * absolute, trailing slash — cannot mint a second run whose replayed
-    * batches re-append rows the (run, batch_id, store) idempotent key
-    * already deduped (r11 advice).
-    */
   /** The committed-id K2 gate shared by the ingest lanes (decontam,
     * fuzzy-dedup): anti-join the batch against the committed ids, with
     * TWO exact prunes layered by on-disk layout (r13 verdict #2 — the
@@ -695,19 +666,6 @@ object IncrementalStream {
     }
   }
 
-  /** Visible ingests of a gate store still lacking a `gate_ids` base
-    * — the flat-tail depth the lanes' compaction policy bounds. One
-    * directory listing per batch.
-    */
-  private def uncompactedGateIngests(sp: SparkSession,
-                                     storeDir: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    graft.operators.StoreProtocol.visibleKeys(fs, root)
-      .count(k => !fs.exists(
-        new org.apache.hadoop.fs.Path(s"$storeDir/gate_ids/ingest=$k")))
-  }
-
   /** Fold a gate store's flat per-batch ingests into the bucketed
     * `gate_ids` base. `tables` lists the marker-shared tables (decontam:
     * docs; fuzzy: docs/bands/shingles — they share one commit key, so
@@ -723,9 +681,9 @@ object IncrementalStream {
     * K2 gate keeps ids disjoint across them), and the
     * supersede flip retires the tail atomically
     * ([[graft.operators.StoreProtocol.commitIncremental]]). The
-    * SMALLEST generations beyond
-    * [[graft.operators.StoreProtocol.MaxBaseGens]] fold back in
-    * (tiered — [[graft.operators.StoreProtocol.tierFoldSelection]]). `gate_meta.committed_ids` updates exactly —
+    * SMALLEST generations beyond `maxGens` fold back in
+    * ([[graft.operators.StoreProtocol.planFold]]).
+    * `gate_meta.committed_ids` updates exactly —
     * the K2 gate makes every tail id new by construction, so the count
     * is prior + tail (seeded by one full count on a pre-counter store);
     * it is written BEFORE the flip (a crash leaves an overcount on an
@@ -737,28 +695,17 @@ object IncrementalStream {
     val proto = graft.operators.StoreProtocol
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    healSwap(fs, root)
+    proto.heal(fs, root)
     proto.sweepSuperseded(fs, root, tables :+ "gate_ids")
     val visible = proto.visibleKeys(fs, root)
     val before = visible.length
     if (before == 0) return (0, 0)
-    val (indexed, flat) = visible.partition(k => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$dir/gate_ids/ingest=$k")))
-    val gens = indexed.sortBy(k => (proto.genOf(k), k))
-    if (flat.isEmpty && gens.length <= maxGens)
-      return (before, before)
+    val plan = proto.planFold(fs, s"$dir/gate_ids", visible, maxGens,
+      "retained_")
+    if (!plan.due) return (before, before)
+    import plan.{flat, folded, gens, key, retired}
     val buckets =
       if (gens.isEmpty) proto.WideLsmBuckets else gateBucketsOf(sp, fs, dir)
-    val keep = math.max(maxGens - 1, 0)
-    // tier folds retire the SMALLEST generations, never "the oldest" —
-    // the oldest is the original full base, and age-ordered folding
-    // would rewrite it every `keep` folds (StoreProtocol.tierFoldSelection)
-    val folded = proto.tierFoldSelection(fs, s"$dir/gate_ids", gens, keep)
-    val retired = flat ++ folded
-    val foldedSet = folded.toSet
-    val live = gens.filterNot(foldedSet)
-    val gen = visible.map(proto.genOf).max + 1
-    val key = s"retained_${gen}_${proto.keyHash(retired)}"
     tables.foreach { t =>
       sp.read.parquet(retired.map(k => s"$dir/$t/ingest=$k"): _*)
         .write.mode("overwrite").parquet(s"$dir/$t/ingest=$key")
@@ -795,7 +742,7 @@ object IncrementalStream {
     }
     writeGateMeta(sp, dir, buckets, total)
     proto.commitIncremental(fs, root, tables :+ "gate_ids", key, retired)
-    (before, live.length + 1)
+    (before, plan.live.length + 1)
   }
 
   /** Write the bucketed `gate_ids` base + `gate_meta` for one retained
@@ -857,22 +804,38 @@ object IncrementalStream {
         Seq("docs", "bands", "shingles"), idCol, maxGens)
     }
 
+  /** The audit tables' run identity: the stream's checkpoint location,
+    * QUALIFIED against its filesystem (scheme + authority + absolute
+    * path) so the same checkpoint spelled differently — relative vs
+    * absolute, trailing slash — cannot mint a second run whose replayed
+    * batches re-append rows the (run, batch_id, store) idempotent key
+    * already deduped (r11 advice).
+    */
   private def auditRunKey(spark: SparkSession, checkpointDir: String): String = {
     val p = new org.apache.hadoop.fs.Path(checkpointDir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(p).toString
   }
 
-  private def healSwap(fs: org.apache.hadoop.fs.FileSystem,
-                       path: org.apache.hadoop.fs.Path): Unit =
-    graft.operators.StoreProtocol.heal(fs, path)
+  /** A lane batch's commit key: the batch id as its generation, so a
+    * same-checkpoint re-delivery mints the same key and overwrites in
+    * place, plus the accepted ids' content hash, so a fresh-checkpoint
+    * re-read of other content cannot collide.
+    */
+  private def batchKey(accepted: DataFrame, batchId: Long,
+                       idCol: String): String =
+    graft.operators.StoreProtocol.ingestKey("", batchId, accepted
+      .agg(graft.operators.StoreProtocol.contentHash(col(idCol).cast("string")))
+      .head().getString(0))
 
-  /** Committed ingests of `storeDir/table` still in the FLAT append
-    * layout — the depth the LSM-store lanes' compaction policy bounds:
-    * every uncompacted ingest is one more flat partial in each read
-    * (and, for the graph store, one more broadcast join in the remap
-    * chain), so a lane that never folds accrues unbounded read cost.
-    * One directory listing per batch, no data read.
+  /** Visible ingests of `storeDir/table` still in the FLAT append
+    * layout — the depth every lane's compaction policy bounds: each
+    * uncompacted ingest is one more flat partial in each read (for the
+    * graph store, one more broadcast join in the remap chain; for the
+    * gate stores, `table` is `gate_ids` and an ingest without a base is
+    * one more range-pruned docs read), so a lane that never folds
+    * accrues unbounded read cost. One directory listing per batch, no
+    * data read.
     */
   private def uncompactedIngests(sp: SparkSession, storeDir: String,
                                  table: String): Int = {
@@ -919,7 +882,7 @@ object IncrementalStream {
     graft.operators.Lease.withLease(spark, stateDir, "forgetFuzzyState") {
       val root = new org.apache.hadoop.fs.Path(stateDir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      healSwap(fs, root)
+      graft.operators.StoreProtocol.heal(fs, root)
       val committed = graft.operators.StoreProtocol.visibleKeys(fs, root)
       def readState(table: String) = spark.read.parquet(
         committed.map(key => s"$stateDir/$table/ingest=$key"): _*)
@@ -943,10 +906,9 @@ object IncrementalStream {
           // monotone generation + content hash: two successive rebuilds
           // can never reuse one key (r14 advice — the old retained_<count>
           // repeated after fold/grow/fold cycles)
-          val gen = committed
-            .map(graft.operators.StoreProtocol.genOf).max + 1
-          val retainedKey =
-            s"retained_${gen}_${graft.operators.StoreProtocol.keyHash(committed)}"
+          val proto = graft.operators.StoreProtocol
+          val retainedKey = proto.ingestKey("retained_",
+            proto.nextGen(committed), proto.keyHash(committed))
           Seq("docs", "bands", "shingles").foreach { table =>
             readState(table).join(keys, Seq(idCol), "left_anti")
               .write.mode("overwrite")
@@ -960,13 +922,11 @@ object IncrementalStream {
           // re-compacts
           writeGateBase(spark, fs, tmp.toString, retainedKey,
             spark.read.parquet(s"$tmp/docs/ingest=$retainedKey"), idCol)
-          fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, "_commits"))
-          fs.create(new org.apache.hadoop.fs.Path(tmp,
-            s"_commits/$retainedKey"), true).close()
+          proto.commit(fs, tmp, retainedKey)
         } else {
-          // everything retracted: an empty-committed state (no markers)
-          // — readers treat it exactly like a fresh stateDir
-          fs.mkdirs(new org.apache.hadoop.fs.Path(tmp, "_commits"))
+          // everything retracted: an empty state (no markers) — readers
+          // treat it exactly like a fresh stateDir
+          fs.mkdirs(tmp)
         }
         graft.operators.StoreProtocol.swapInto(fs, tmp, root,
           "forgetFuzzyState")
@@ -1097,7 +1057,7 @@ object IncrementalStream {
             // less table residue of a whole-corpus un-commit crash,
             // which forgetBm25's entry sweep finishes. An incremental
             // index whose FIRST ingest crashed before its meta write
-            // shows the flat residue face (tables, no meta/_commits)
+            // shows the flat residue face (tables, no meta or markers)
             // but its tables hold ingest= children — classify it
             // incremental (forgetBm25Incremental no-ops on zero
             // commits; the content replay overwrites the orphan in
@@ -1109,7 +1069,10 @@ object IncrementalStream {
               fs.exists(path) && fs.listStatus(path).exists(s =>
                 s.isDirectory && s.getPath.getName.startsWith("ingest="))
             }
-            val incr = exists(s"$d/meta") || exists(s"$d/_commits") ||
+            val dPath = new org.apache.hadoop.fs.Path(d)
+            val incr = exists(s"$d/meta") ||
+              graft.operators.StoreProtocol.hasCommitDir(
+                dPath.getFileSystem(conf), dPath) ||
               exists(s"${d}__old/meta") || ingestChildren(s"$d/postings") ||
               ingestChildren(s"$d/doc_len")
             val flat = !incr && (exists(s"$d/stats") || exists(s"${d}__old/stats") ||
@@ -1123,7 +1086,7 @@ object IncrementalStream {
                 graft.operators.Retrieval.forgetBm25(sp, d, ids) })
             else require(emptyOrAbsent(d) && emptyOrAbsent(d + "__old"),
               s"retractionIngest: $d matches neither BM25 layout (no " +
-                "stats, no meta/_commits) — a misconfigured takedown " +
+                "stats, no meta or commit markers) — a misconfigured takedown " +
                 "feed must fail, not silently skip the store")
             // absent/empty: not built yet (or un-committed whole-corpus
             // retraction) — skipped this batch, retracts on a later feed

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MainAllowlistSpec extends AnyFunSuite {
 
   private val Allowed =
-    Set("Bench", "Verify", "Measure", "ScaleProbe", "Demo", "Explain", "CuratePipeline")
+    Set("Bench", "Verify", "Measure", "Demo", "Explain", "CuratePipeline")
 
   /** `src/main/scala` of the build, found upward from the working directory. */
   private def mainSources: Path =

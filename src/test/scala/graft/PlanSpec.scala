@@ -481,4 +481,17 @@ class PlanSpec extends SparkSpec {
       assert(on.nonEmpty && on == off, q)
     }
   }
+
+  test("IVF routing embeds the same pivot literal whatever order the pivot rows arrive in") {
+    val s = spark
+    import s.implicits._
+    val pivots = Seq((2L, Array(0f, 1f)), (1L, Array(1f, 0f)), (3L, Array(0.6f, 0.8f)))
+    val corpus = Seq((10L, Array(0.9f, 0.1f))).toDF("vec_id", "embedding")
+    def routed(rows: Seq[(Long, Array[Float])]): String =
+      graft.operators.Similarity
+        .ivfRoute(corpus, rows.toDF("cell_id", "pv"), "embedding", "vec_id")
+        .queryExecution.analyzed.toString
+        .replaceAll("#\\d+", "#").replaceAll("lambda x_\\d+", "lambda x")
+    assert(routed(pivots) == routed(pivots.reverse))
+  }
 }

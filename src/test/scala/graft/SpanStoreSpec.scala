@@ -208,6 +208,33 @@ class SpanStoreSpec extends SparkSpec {
     assert(probeRows(dir) == expected)
   }
 
+  test("an append after a forget mints a generation above every earlier key") {
+    val dir = tmp()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def keys() = graft.operators.StoreProtocol.committedKeys(fs, root)
+    def gen(k: String) = graft.operators.StoreProtocol.genOf(k)
+    val docs = (1 to 3).map(i =>
+      (i.toLong, s"f${i}a f${i}b f${i}c f${i}d f${i}e f${i}f f${i}g f${i}h"))
+    val appended = docs.flatMap { d =>
+      SpanStore.append(spark, dir, Seq(d).toDF("doc_id", "text"), "text",
+        "doc_id", k = 8)
+      keys()
+    }
+    assert(SpanStore.forget(spark, dir, Seq(docs.head).toDF("doc_id", "text"),
+      "text", "doc_id") == 1L)
+    val afterForget = keys()
+    assert(afterForget.length == 1)
+    SpanStore.append(spark, dir,
+      Seq((4L, "g1 g2 g3 g4 g5 g6 g7 g8")).toDF("doc_id", "text"),
+      "text", "doc_id", k = 8)
+    val fresh = keys().filterNot(afterForget.toSet)
+    assert(fresh.length == 1)
+    val earlier = (appended ++ afterForget).distinct
+    assert(earlier.forall(gen(_) < gen(fresh.head)),
+      s"${fresh.head} reuses a generation of ${earlier.mkString(", ")}")
+  }
+
   test("unmarked ingest partitions are invisible and swept by the next append") {
     val dir = tmp()
     SpanStore.append(spark, dir, corpus, "text", "doc_id", k = 8)
