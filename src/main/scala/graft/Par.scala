@@ -19,6 +19,10 @@ package graft
   * directories, no shared mutable state — so results are byte-identical
   * to the sequential order (each leg's own computation is unchanged;
   * scheduling overlap cannot reorder anything a leg observes).
+  *
+  * Failure: a caller with several legs joins them through [[awaitAll]],
+  * which waits for every leg before it rethrows, so no leg outlives
+  * the caller's lease.
   */
 private[graft] object Par {
   private lazy val pool = java.util.concurrent.Executors.newCachedThreadPool(
@@ -42,11 +46,13 @@ private[graft] object Par {
   def await[A](f: scala.concurrent.Future[A]): A =
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
-  /** Await every leg in argument order, rethrowing the first failure in
-    * that order: a failed leg surfaces only after every leg listed
-    * before it has completed, and the legs after it are not awaited
-    * (they keep running).
+  /** Join every leg, then rethrow the first failure in argument order.
+    * No failure surfaces while a sibling leg still runs, so a caller's
+    * `finally` (a lease release) runs only after every leg has stopped.
+    * Legs are not cancelled: a failed leg's siblings run to completion.
     */
-  def awaitAll(fs: scala.concurrent.Future[_]*): Unit =
+  def awaitAll(fs: scala.concurrent.Future[_]*): Unit = {
+    fs.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
     fs.foreach(await(_))
+  }
 }

@@ -53,11 +53,8 @@ object AnnIndex {
     * by the next compaction).
     */
   private def readCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val corpusPath = new org.apache.hadoop.fs.Path(s"$dir/corpus")
-    StoreProtocol.heal(
-      corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      corpusPath)
-    val df = spark.read.parquet(corpusPath.toString)
+    StoreProtocol.open(spark, dir, "corpus")
+    val df = spark.read.parquet(s"$dir/corpus")
     df.withColumn("cell_id", col("cell_id").cast("long"))
   }
 
@@ -409,8 +406,8 @@ object AnnIndex {
         .select(col("pivot_id").as("cell_id"), col("pivot_vec").as("pv"))
         .write.mode("overwrite").parquet(s"$dir/pivots"))
     val cbLeg = graft.Par.run(Pq.train(corpus, vecCol, idCol, m, ksub, iters))
+    graft.Par.awaitAll(cbLeg, pivotLeg)
     val cb = graft.Par.await(cbLeg)
-    graft.Par.await(pivotLeg)
     val pivots = spark.read.parquet(s"$dir/pivots")
     graft.Par.awaitAll(
       graft.Par.run(
@@ -607,14 +604,14 @@ object AnnIndex {
       n
     }
     val before = countFiles(corpusPath)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/corpus__compact")
     // one shuffle partition per distinct cell → exactly one file per cell
     val df = readCorpus(spark, dir)
     val nCells = df.select("cell_id").distinct().count().toInt.max(1)
-    df.repartition(nCells, col("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id")
-      .parquet(tmp.toString)
-    StoreProtocol.swapInto(fs, tmp, corpusPath, "compactIvf")
+    StoreProtocol.rewrite(fs, corpusPath, "__compact", "compactIvf") { tmp =>
+      df.repartition(nCells, col("cell_id"))
+        .write.mode("overwrite").partitionBy("cell_id")
+        .parquet(tmp.toString)
+    }
     (before, countFiles(corpusPath))
   }
 

@@ -67,32 +67,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraphStore {
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The per-ingest tables; they share each ingest's commit key. */
   private val Tables = Seq("labels", "remap", "edges")
 
-  private def metaOf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/meta")
+  /** The store's node column; `op` refuses an empty store. */
+  private def nodeColOf(store: StoreProtocol.Store, op: String): String = {
+    require(!store.isEmpty, s"GraphStore.$op: nothing committed at ${store.dir}")
+    store.meta.getAs[String]("node_col")
+  }
 
-  private def readMeta(spark: SparkSession, dir: String): String =
-    metaOf(spark, dir).select("node_col").head().getString(0)
-
-  private def bucketsOf(spark: SparkSession, dir: String): Int =
-    StoreProtocol.pinnedLsmBuckets(metaOf(spark, dir))
+  private def metaFrame(spark: SparkSession, nodeCol: String,
+                        buckets: Int): DataFrame = {
+    import spark.implicits._
+    require(buckets >= 1, s"GraphStore: lsmBuckets must be >= 1, got $buckets")
+    Seq((nodeCol, buckets)).toDF("node_col", "lsm_buckets")
+  }
 
   /** Committed (node, comp) label rows — the shared LSM pair
     * ([[StoreProtocol.readLsm]]); when `touched` is given, the bucketed
     * base prunes to those nodes' buckets under the store's PINNED
     * modulus (meta `lsm_buckets`; 256 for pre-pinning layouts).
     */
-  private def readLabels(spark: SparkSession, dir: String,
-                         fs: org.apache.hadoop.fs.FileSystem,
-                         committed: Seq[String],
-                         touched: Option[DataFrame],
+  private def readLabels(spark: SparkSession, store: StoreProtocol.Store,
+                         keys: Seq[String], touched: Option[DataFrame],
                          buckets: Int): DataFrame =
-    StoreProtocol.readLsm(spark, fs, s"$dir/labels", committed,
+    StoreProtocol.readLsm(spark, store.fs, s"${store.dir}/labels", keys,
       Seq("node", "comp"),
       touched.map(t => StoreProtocol.touchedLsmBuckets(t, "node", buckets)),
       buckets)
@@ -101,12 +100,11 @@ object GraphStore {
     * their generation prefix `i<n>_`/`r<n>_`, so lexicographic-by-
     * generation order is append order).
     */
-  private def remapTables(spark: SparkSession, dir: String,
-                          fs: org.apache.hadoop.fs.FileSystem,
-                          committed: Seq[String]): Seq[DataFrame] =
-    committed.sortBy(StoreProtocol.genOf).flatMap { k =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/remap/ingest=$k")
-      if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+  private def remapTables(spark: SparkSession, store: StoreProtocol.Store,
+                          keys: Seq[String]): Seq[DataFrame] =
+    keys.sortBy(StoreProtocol.genOf).flatMap { k =>
+      val p = new org.apache.hadoop.fs.Path(store.ingestDir("remap", k))
+      if (store.fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
     }
 
   /** Resolve `df`'s `comp` column through the remap chain: apply each
@@ -146,28 +144,24 @@ object GraphStore {
              nodeCol: String = "node",
              lsmBuckets: Int = StoreProtocol.WideLsmBuckets,
              localBatchEdgeCap: Long = LocalBatchEdgeCap): (Long, Long) = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
+    val store = StoreProtocol.open(spark, dir)
+    val committed = store.keys
     val pinnedBuckets =
-      if (committed.isEmpty) lsmBuckets
+      if (store.isEmpty) lsmBuckets
       else {
-        val storedNode = readMeta(spark, dir)
+        val storedNode = nodeColOf(store, "append")
         require(storedNode == nodeCol,
           s"GraphStore.append: store at $dir is keyed on '$storedNode', " +
             s"got '$nodeCol'")
-        bucketsOf(spark, dir) // recorded layout is authoritative
+        StoreProtocol.pinnedLsmBuckets(store.meta) // recorded layout is authoritative
       }
-    StoreProtocol.sweepUnmarked(fs, root, Tables)
     val Array(ea, eb) = edges.columns.take(2)
     val e = edges.select(col(ea).cast("long").as("a"), col(eb).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
     val nE = e.count() // cheap readback of the checkpoint
     if (nE == 0L) return (0L, 0L) // empty batch: nothing to log
     if (nE <= localBatchEdgeCap)
-      return appendLocal(spark, dir, fs, root, committed, pinnedBuckets,
-        nodeCol, lsmBuckets, e)
+      return appendLocal(spark, store, pinnedBuckets, nodeCol, lsmBuckets, e)
     val touched = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node"))).distinct()
       .localCheckpoint(true)
@@ -175,9 +169,9 @@ object GraphStore {
     val known =
       if (committed.isEmpty) touched.limit(0).withColumn("comp", col("node"))
       else resolve(
-        readLabels(spark, dir, fs, committed, Some(touched), pinnedBuckets)
+        readLabels(spark, store, committed, Some(touched), pinnedBuckets)
           .join(broadcast(touched), Seq("node"), "left_semi"),
-        remapTables(spark, dir, fs, committed))
+        remapTables(spark, store, committed))
         .localCheckpoint(true)
     // contract: every endpoint becomes its current root (new nodes are
     // their own root), then CC on the batch-sized contracted graph
@@ -232,31 +226,32 @@ object GraphStore {
     // key hash over the TOUCHED set, not the new nodes: a replayed or
     // merge-only batch still needs a deterministic key so a crashed
     // attempt's retry overwrites its own orphan
-    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
+    val key = store.nextKey("i",
       touched.agg(StoreProtocol.contentHash(col("node").cast("string")))
         .head().getString(0))
-    // the three ingest tables derive from checkpointed frames and land
-    // in disjoint dirs — overlap the writes (unmarked dirs stay
-    // invisible whatever subset a crash leaves; marker after the barrier)
-    graft.Par.awaitAll(
-      // labels write is unconditional (possibly empty): every committed
-      // ingest must carry a labels dir for the multi-path reader
-      graft.Par.run(
-        newNodes.write.mode("overwrite").parquet(s"$dir/labels/ingest=$key")),
-      graft.Par.run(if (merges > 0L)
-        merged.write.mode("overwrite").parquet(s"$dir/remap/ingest=$key")),
-      graft.Par.run(
-        e.write.mode("overwrite").parquet(s"$dir/edges/ingest=$key")))
-    if (committed.isEmpty) {
-      import spark.implicits._
-      require(lsmBuckets >= 1,
-        s"GraphStore.append: lsmBuckets must be >= 1, got $lsmBuckets")
-      Seq((nodeCol, lsmBuckets)).toDF("node_col", "lsm_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    }
-    StoreProtocol.commit(fs, root, key)
+    ingestBatch(spark, store, key, nodeCol, lsmBuckets, newNodes,
+      if (merges > 0L) Some(merged) else None, e)
     (fresh, merges)
   }
+
+  /** Commit one append's three tables under `key`. They derive from
+    * checkpointed frames and land in disjoint dirs, so the writes
+    * overlap (unmarked dirs stay invisible whatever subset a crash
+    * leaves; the marker comes after the barrier). The labels write is
+    * unconditional (possibly empty): every committed ingest must carry
+    * a labels dir for the multi-path reader.
+    */
+  private def ingestBatch(spark: SparkSession, store: StoreProtocol.Store,
+                          key: String, nodeCol: String, lsmBuckets: Int,
+                          labels: DataFrame, remap: Option[DataFrame],
+                          edges: DataFrame): Unit =
+    StoreProtocol.ingest(store, Tables, key,
+        Some(metaFrame(spark, nodeCol, lsmBuckets))) { at =>
+      graft.Par.awaitAll(
+        graft.Par.run(labels.write.mode("overwrite").parquet(at("labels"))),
+        graft.Par.run(remap.foreach(_.write.mode("overwrite").parquet(at("remap")))),
+        graft.Par.run(edges.write.mode("overwrite").parquet(at("edges"))))
+    }
 
   /** The driver batch computation behind [[append]]'s fast path — the
     * distributed tail fold for fold: contract the collected batch edges
@@ -268,10 +263,10 @@ object GraphStore {
     * ([[StoreProtocol.localContentHash]]). Components and labels are
     * integer facts — no numeric grid to replicate.
     */
-  private def appendLocal(spark: SparkSession, dir: String,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      committed: Seq[String], pinnedBuckets: Int, nodeCol: String,
-      lsmBuckets: Int, e: DataFrame): (Long, Long) = {
+  private def appendLocal(spark: SparkSession, store: StoreProtocol.Store,
+      pinnedBuckets: Int, nodeCol: String, lsmBuckets: Int,
+      e: DataFrame): (Long, Long) = {
+    val committed = store.keys
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val eRows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -296,11 +291,11 @@ object GraphStore {
         val tb = touched.map(v =>
           (((v % pinnedBuckets) + pinnedBuckets) % pinnedBuckets).toInt)
           .distinct.toSeq
-        val lbl = StoreProtocol.readLsm(spark, fs, s"$dir/labels", committed,
-            Seq("node", "comp"), Some(tb), pinnedBuckets)
+        val lbl = StoreProtocol.readLsm(spark, store.fs, s"${store.dir}/labels",
+            committed, Seq("node", "comp"), Some(tb), pinnedBuckets)
           .join(broadcast(touchedDf), Seq("node"), "left_semi")
           .collect() // bounded: ≤ |touched|
-        val remaps = remapTables(spark, dir, fs, committed).map(
+        val remaps = remapTables(spark, store, committed).map(
           _.collect() // bounded: merge volume (≤ MaxComposedRemap per read)
             .map(r => r.getLong(0) -> r.getLong(1)).toMap)
         val m = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -332,7 +327,7 @@ object GraphStore {
     val fresh = newNodes.length.toLong
     // same key as the distributed path: the touched set's content hash,
     // replayed on the driver
-    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
+    val key = store.nextKey("i",
       StoreProtocol.localContentHash(touched.iterator.map(_.toString)))
     val pairSchema = StructType(Seq(StructField("node", LongType),
       StructField("comp", LongType)))
@@ -341,25 +336,12 @@ object GraphStore {
       rows.foreach { case (a, b) => l.add(Row(a, b)) }
       spark.createDataFrame(l, s)
     }
-    graft.Par.awaitAll(
-      // labels write is unconditional (possibly empty): every committed
-      // ingest must carry a labels dir for the multi-path reader
-      graft.Par.run(pairDf(newNodes, pairSchema)
-        .write.mode("overwrite").parquet(s"$dir/labels/ingest=$key")),
-      graft.Par.run(if (merges > 0L)
-        pairDf(merged, StructType(Seq(StructField("old_comp", LongType),
-            StructField("new_comp", LongType))))
-          .write.mode("overwrite").parquet(s"$dir/remap/ingest=$key")),
-      graft.Par.run(
-        e.write.mode("overwrite").parquet(s"$dir/edges/ingest=$key")))
-    if (committed.isEmpty) {
-      import spark.implicits._
-      require(lsmBuckets >= 1,
-        s"GraphStore.append: lsmBuckets must be >= 1, got $lsmBuckets")
-      Seq((nodeCol, lsmBuckets)).toDF("node_col", "lsm_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    }
-    StoreProtocol.commit(fs, root, key)
+    ingestBatch(spark, store, key, nodeCol, lsmBuckets,
+      pairDf(newNodes, pairSchema),
+      if (merges > 0L) Some(pairDf(merged, StructType(Seq(
+        StructField("old_comp", LongType), StructField("new_comp", LongType)))))
+      else None,
+      e)
     (fresh, merges)
   }
 
@@ -367,15 +349,11 @@ object GraphStore {
     * ingested, labels current through the whole remap chain.
     */
   def labels(spark: SparkSession, dir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
-    require(committed.nonEmpty, s"GraphStore.labels: nothing committed at $dir")
-    val nodeCol = readMeta(spark, dir)
-    resolve(readLabels(spark, dir, fs, committed, touched = None,
-          bucketsOf(spark, dir)),
-        remapTables(spark, dir, fs, committed))
+    val store = StoreProtocol.open(spark, dir)
+    val nodeCol = nodeColOf(store, "labels")
+    resolve(readLabels(spark, store, store.keys, touched = None,
+          StoreProtocol.pinnedLsmBuckets(store.meta)),
+        remapTables(spark, store, store.keys))
       .select(col("node").as(nodeCol), col("comp").as("component"))
   }
 
@@ -392,18 +370,11 @@ object GraphStore {
     */
   def coreness(spark: SparkSession, dir: String,
                maxRounds: Int = 1000): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
-    require(committed.nonEmpty,
-      s"GraphStore.coreness: nothing committed at $dir")
-    val nodeCol = readMeta(spark, dir)
+    val store = StoreProtocol.open(spark, dir)
+    val nodeCol = nodeColOf(store, "coreness")
     // raw log in; Graph.coreness canonicalizes (a<b, de-duped) itself,
     // which also collapses replayed ingests' duplicate edges
-    val edges = spark.read
-      .parquet(committed.map(c => s"$dir/edges/ingest=$c"): _*)
-      .select(col("a"), col("b"))
+    val edges = store.read("edges").select(col("a"), col("b"))
     Graph.coreness(edges, maxRounds)
       .select(col("node").as(nodeCol), col("coreness"))
   }
@@ -414,20 +385,15 @@ object GraphStore {
     */
   def componentOf(spark: SparkSession, dir: String,
                   nodes: DataFrame): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
-    require(committed.nonEmpty,
-      s"GraphStore.componentOf: nothing committed at $dir")
-    val nodeCol = readMeta(spark, dir)
+    val store = StoreProtocol.open(spark, dir)
+    val nodeCol = nodeColOf(store, "componentOf")
     val want = nodes.select(col(nodes.columns.head).cast("long").as("node"))
       .distinct().localCheckpoint(true)
     resolve(
-        readLabels(spark, dir, fs, committed, Some(want),
-            bucketsOf(spark, dir))
+        readLabels(spark, store, store.keys, Some(want),
+            StoreProtocol.pinnedLsmBuckets(store.meta))
           .join(broadcast(want), Seq("node"), "left_semi"),
-        remapTables(spark, dir, fs, committed))
+        remapTables(spark, store, store.keys))
       .select(col("node").as(nodeCol), col("comp").as("component"))
   }
 
@@ -459,26 +425,22 @@ object GraphStore {
               maxGens: Int = StoreProtocol.MaxBaseGens): (Int, Int) =
     Lease.withLease(spark, dir, "GraphStore.compact") {
       require(maxGens >= 1, s"GraphStore.compact: maxGens >= 1, got $maxGens")
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = fsOf(spark, root)
-      StoreProtocol.heal(fs, root)
-      StoreProtocol.sweepSuperseded(fs, root, Tables)
-      val keys = StoreProtocol.visibleKeys(fs, root)
-      val before = keys.length
+      val store = StoreProtocol.open(spark, dir)
+      StoreProtocol.sweepSuperseded(store.fs, store.root, Tables)
+      val before = store.keys.length
       if (before == 0) (0, 0)
       else {
-        val pinned = bucketsOf(spark, dir)
+        val pinned = StoreProtocol.pinnedLsmBuckets(store.meta)
         val migrating = lsmBuckets > 0 && lsmBuckets != pinned
         if (migrating) {
-          consolidate(spark, dir, None, Some(lsmBuckets))
+          consolidate(spark, store, None, Some(lsmBuckets))
           (before, 1)
         } else {
-          val plan = StoreProtocol.planFold(fs, s"$dir/labels", keys,
-            maxGens, "r")
-          sweepStaleRemaps(fs, dir, plan.gens)
+          val plan = StoreProtocol.planFold(store.fs, s"$dir/labels",
+            store.keys, maxGens, "r")
+          sweepStaleRemaps(store, plan.gens)
           if (!plan.due) (before, before)
-          else (before,
-            consolidateIncremental(spark, dir, fs, root, keys, plan, pinned))
+          else (before, consolidateIncremental(spark, store, plan, pinned))
         }
       }
     }
@@ -498,9 +460,9 @@ object GraphStore {
     * ingest count after the flip, delegating to the full fold when the
     * composed remap outgrows [[MaxComposedRemap]].
     */
-  private def consolidateIncremental(spark: SparkSession, dir: String,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      keys: Seq[String], plan: StoreProtocol.FoldPlan, buckets: Int): Int = {
+  private def consolidateIncremental(spark: SparkSession,
+      store: StoreProtocol.Store, plan: StoreProtocol.FoldPlan,
+      buckets: Int): Int = {
     import plan.{flat, folded, key, live, retired}
     // the full visible chain, composed to one path-compressed table the
     // new generation carries for the LIVE older generations' unresolved
@@ -508,24 +470,21 @@ object GraphStore {
     // none, the chain folds AWAY (the full-fold contract), and no
     // composition is needed at all. Merge-sized joins, count bounded
     // before anything rewrites.
-    val remaps = remapTables(spark, dir, fs, keys)
+    val remaps = remapTables(spark, store, store.keys)
     val composed = if (live.isEmpty) None else composeRemaps(remaps)
     val composedCount = composed.map(_.count()).getOrElse(0L)
     if (composedCount > MaxComposedRemap) {
-      consolidate(spark, dir, None)
+      consolidate(spark, store, None)
       return 1
     }
     val tail =
       if (flat.isEmpty) None
-      else Some(spark.read
-        .parquet(flat.map(k => s"$dir/labels/ingest=$k"): _*)
-        .select(col("node"), col("comp")))
+      else Some(store.read("labels", flat).select(col("node"), col("comp")))
     // the folded small generations read WHOLE (they are the fold's own
     // cost, chosen smallest-first); live generations are never opened
     val foldedRows =
       if (folded.isEmpty) None
-      else Some(StoreProtocol.readLsm(spark, fs, s"$dir/labels", folded,
-        Seq("node", "comp"), touched = None, buckets))
+      else Some(readLabels(spark, store, folded, touched = None, buckets))
     val mergedLabels = (tail.toSeq ++ foldedRows.toSeq) match {
       case Nil =>
         import org.apache.spark.sql.types._
@@ -540,17 +499,17 @@ object GraphStore {
         resolve(pieces.reduce(_.unionByName(_)), remaps)
     }
     StoreProtocol.writeLsmBase(mergedLabels, "node",
-      s"$dir/labels/ingest=$key", buckets)
+      store.ingestDir("labels", key), buckets)
     composed.filter(_ => composedCount > 0L).foreach(
-      _.write.mode("overwrite").parquet(s"$dir/remap/ingest=$key"))
-    spark.read.parquet(retired.map(k => s"$dir/edges/ingest=$k"): _*)
-      .write.mode("overwrite").parquet(s"$dir/edges/ingest=$key")
-    StoreProtocol.commitIncremental(fs, root, Tables, key, retired)
+      _.write.mode("overwrite").parquet(store.ingestDir("remap", key)))
+    store.read("edges", retired)
+      .write.mode("overwrite").parquet(store.ingestDir("edges", key))
+    StoreProtocol.commitIncremental(store.fs, store.root, Tables, key, retired)
     // older generations' composed remaps are subsets of the new one (each
     // was composed from the chain visible at its creation, which the new
     // composition consumed) — redundant, and re-applying them is a no-op,
     // but every read broadcasts them: sweep
-    sweepStaleRemaps(fs, dir, live :+ key)
+    sweepStaleRemaps(store, live :+ key)
     live.length + 1
   }
 
@@ -584,14 +543,13 @@ object GraphStore {
     * older ones by construction (safe even interrupted: re-applying a
     * subsumed table is a no-op).
     */
-  private def sweepStaleRemaps(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String, gens: Seq[String]): Unit = {
-    val withRemap = gens.filter(k =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/remap/ingest=$k")))
+  private def sweepStaleRemaps(store: StoreProtocol.Store,
+                               gens: Seq[String]): Unit = {
+    def remap(k: String) = new org.apache.hadoop.fs.Path(store.ingestDir("remap", k))
+    val withRemap = gens.filter(k => store.fs.exists(remap(k)))
     if (withRemap.length > 1) {
       val newest = withRemap.maxBy(k => (StoreProtocol.genOf(k), k))
-      withRemap.filterNot(_ == newest).foreach(k =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/remap/ingest=$k"), true))
+      withRemap.filterNot(_ == newest).foreach(k => store.fs.delete(remap(k), true))
     }
   }
 
@@ -606,23 +564,17 @@ object GraphStore {
   def forget(spark: SparkSession, dir: String, edges: DataFrame): Long =
     Lease.withLease(spark, dir, "GraphStore.forget") {
       val Array(ea, eb) = edges.columns.take(2)
-      consolidate(spark, dir, Some(edges
+      consolidate(spark, StoreProtocol.open(spark, dir), Some(edges
         .select(col(ea).cast("long").as("a"), col(eb).cast("long").as("b"))))
     }
 
-  private def consolidate(spark: SparkSession, dir: String,
+  private def consolidate(spark: SparkSession, store: StoreProtocol.Store,
                           drop: Option[DataFrame],
                           migrateBuckets: Option[Int] = None): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
-    if (committed.isEmpty) return 0L
-    val nodeCol = readMeta(spark, dir)
-    val buckets = migrateBuckets.getOrElse(bucketsOf(spark, dir))
-    val allEdges = spark.read
-      .parquet(committed.map(c => s"$dir/edges/ingest=$c"): _*)
-      .distinct().localCheckpoint(true)
+    if (store.isEmpty) return 0L
+    val nodeCol = store.meta.getAs[String]("node_col")
+    val buckets = migrateBuckets.getOrElse(StoreProtocol.pinnedLsmBuckets(store.meta))
+    val allEdges = store.read("edges").distinct().localCheckpoint(true)
     // drop set symmetric: (a,b) retracts the stored edge either way round
     val (survivors, removed) = drop match {
       case Some(d) =>
@@ -635,8 +587,7 @@ object GraphStore {
       case None => (allEdges, 0L)
     }
     if (drop.isDefined && removed == 0L) return 0L
-    val nodes = readLabels(spark, dir, fs, committed, touched = None,
-        buckets)
+    val nodes = readLabels(spark, store, store.keys, touched = None, buckets)
       .select(col("node")).distinct().localCheckpoint(true)
     val relabeled = Dedup.clusterReps(nodes,
         survivors.select(col("a").as("id_a"), col("b").as("id_b")), "node")
@@ -644,21 +595,17 @@ object GraphStore {
     val stats = nodes
       .agg(count(lit(1)), StoreProtocol.contentHash(col("node").cast("string")))
       .head()
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__consolidate")
-    fs.delete(tmp, true)
-    fs.mkdirs(tmp)
-    if (stats.getLong(0) > 0L) {
-      val key = StoreProtocol.ingestKey("r", StoreProtocol.nextGen(committed),
-        stats.getString(1))
-      StoreProtocol.writeLsmBase(relabeled, "node",
-        s"$tmp/labels/ingest=$key", buckets)
-      survivors.write.mode("overwrite").parquet(s"$tmp/edges/ingest=$key")
-      import spark.implicits._
-      Seq((nodeCol, buckets)).toDF("node_col", "lsm_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-      StoreProtocol.commit(fs, tmp, key)
+    StoreProtocol.rewrite(store.fs, store.root, "__consolidate",
+        "GraphStore.consolidate") { tmp =>
+      store.fs.mkdirs(tmp)
+      if (stats.getLong(0) > 0L)
+        StoreProtocol.ingest(store.emptyAt(tmp), Tables,
+            store.nextKey("r", stats.getString(1)),
+            Some(metaFrame(spark, nodeCol, buckets))) { at =>
+          StoreProtocol.writeLsmBase(relabeled, "node", at("labels"), buckets)
+          survivors.write.mode("overwrite").parquet(at("edges"))
+        }
     }
-    StoreProtocol.swapInto(fs, tmp, root, "GraphStore.consolidate")
     removed
   }
 }

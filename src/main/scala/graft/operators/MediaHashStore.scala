@@ -38,18 +38,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object MediaHashStore {
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def healed(spark: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/hashes")
-    StoreProtocol.heal(fsOf(spark, path), path)
-  }
+  /** The store with a `hashes` swap parked at `__old` healed. */
+  private def opened(spark: SparkSession, dir: String) =
+    StoreProtocol.open(spark, dir, "hashes")
 
   /** Does `dir` hold a committed store? (meta marker present) */
-  def exists(spark: SparkSession, dir: String): Boolean =
-    fsOf(spark, new org.apache.hadoop.fs.Path(s"$dir/meta"))
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))
+  def exists(spark: SparkSession, dir: String): Boolean = {
+    val meta = new org.apache.hadoop.fs.Path(s"$dir/meta")
+    meta.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(meta)
+  }
 
   /** Append a batch of unit hashes (columns: ids…, grid, dhash; null
     * hashes must already be filtered). The first append commits the
@@ -70,9 +67,8 @@ object MediaHashStore {
     */
   def append(spark: SparkSession, dir: String, hashes: DataFrame): Unit = {
     import spark.implicits._
-    healed(spark, dir)
+    val fs = opened(spark, dir).fs
     val hashesDir = new org.apache.hadoop.fs.Path(s"$dir/hashes")
-    val fs = fsOf(spark, hashesDir)
     if (!exists(spark, dir)) fs.delete(hashesDir, true)
     val stage = new org.apache.hadoop.fs.Path(s"$dir/hashes__stage")
     fs.delete(stage, true) // a crashed append's debris (single writer)
@@ -98,7 +94,7 @@ object MediaHashStore {
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
     require(exists(spark, dir), s"MediaHashStore: no committed store at $dir")
-    healed(spark, dir)
+    opened(spark, dir)
     // recursive lookup: appends commit as batch SUBDIRECTORIES (the
     // staged-rename protocol), compaction writes flat files — both are
     // plain leaf-file layouts, no partition inference wanted
@@ -143,10 +139,8 @@ object MediaHashStore {
 
   private def compactImpl(spark: SparkSession, dir: String,
                           idCol: String): (Int, Int) = {
-    healed(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = opened(spark, dir).fs
     val path = new org.apache.hadoop.fs.Path(s"$dir/hashes")
-    val fs = path.getFileSystem(conf)
     // one recursive listing yields both the file count and the byte
     // total (an object store charges per LIST round trip)
     def scanTree(p: org.apache.hadoop.fs.Path): (Int, Long) = {
@@ -173,12 +167,11 @@ object MediaHashStore {
     // parallelism
     val nFiles = math.max(spark.sparkContext.defaultParallelism.toLong,
       bytes / (128L << 20) + 1L).toInt
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/hashes__compact")
-    fs.delete(tmp, true)
-    df.repartitionByRange(nFiles, col(idCol))
-      .sortWithinPartitions(col(idCol))
-      .write.mode("overwrite").parquet(tmp.toString)
-    StoreProtocol.swapInto(fs, tmp, path, "MediaHashStore.compact")
+    StoreProtocol.rewrite(fs, path, "__compact", "MediaHashStore.compact") { tmp =>
+      df.repartitionByRange(nFiles, col(idCol))
+        .sortWithinPartitions(col(idCol))
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
     (before, scanTree(path)._1)
   }
 
@@ -203,7 +196,7 @@ object MediaHashStore {
   private def forgetImpl(spark: SparkSession, dir: String, ids: DataFrame,
                          idCol: String): Long = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/hashes")
-    val fs = fsOf(spark, path)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!exists(spark, dir)) {
       // a whole-store retraction that crashed between its meta and
       // hashes deletes leaves the retracted hash rows as an uncommitted
@@ -212,7 +205,6 @@ object MediaHashStore {
       fs.delete(path, true)
       return 0L
     }
-    healed(spark, dir)
     val store = read(spark, dir)
     val keys = ids.select(col(idCol)).distinct()
     // one scan answers removed AND whole-store retraction together (a
@@ -231,10 +223,9 @@ object MediaHashStore {
       fs.delete(meta, true)
       fs.delete(path, true)
     } else {
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/hashes__forget")
-      fs.delete(tmp, true)
-      kept.write.mode("overwrite").parquet(tmp.toString)
-      StoreProtocol.swapInto(fs, tmp, path, "MediaHashStore.forget")
+      StoreProtocol.rewrite(fs, path, "__forget", "MediaHashStore.forget") { tmp =>
+        kept.write.mode("overwrite").parquet(tmp.toString)
+      }
     }
     removed
   }

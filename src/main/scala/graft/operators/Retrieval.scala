@@ -152,19 +152,6 @@ object Retrieval {
     * Results are bit-identical to the in-run operator at the same
     * corpus and parameters (spec-pinned).
     */
-  /** Heal a [[forgetBm25]] crashed between its two renames (the whole
-    * index parked at `dir__old`) — run before any read of the index
-    * directory, the AnnIndex.readCorpus discipline at whole-index grain
-    * (the four tables must move together: a postings/doc_freq mix of two
-    * generations would mis-score every query).
-    */
-  private def healIndex(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    StoreProtocol.heal(
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
   /** Retraction from the persisted index ([[buildBm25Index]] layout):
     * drop the retracted docs' postings and doc_len rows, RE-DERIVE
     * doc_freq and the corpus scalars from the surviving postings (df
@@ -189,15 +176,18 @@ object Retrieval {
   private def forgetBm25Impl(spark: org.apache.spark.sql.SparkSession,
                              dir: String, ids: DataFrame): Long = {
     import spark.implicits._
-    healIndex(spark, dir)
+    // the whole index swaps as one directory: the four tables move
+    // together (a postings/doc_freq mix of two generations would
+    // mis-score every query)
+    val store = StoreProtocol.open(spark, dir)
+    val fs = store.fs
     val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(statsPath)) {
       // layout guard FIRST: an incremental index (meta + _commits, no
       // flat stats) must never be swept as "residue" — that is a
       // different store format, not a crashed un-commit
       require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")) &&
-          !StoreProtocol.hasCommitDir(fs, new org.apache.hadoop.fs.Path(dir)),
+          !StoreProtocol.hasCommitDir(fs, store.root),
         s"forgetBm25: $dir holds an INCREMENTAL index — use forgetBm25Incremental")
       // a whole-corpus retraction crashed between its stats delete and
       // the table deletes leaves postings/doc_len/doc_freq bytes with no
@@ -249,7 +239,6 @@ object Retrieval {
       .agg(count(lit(1)), count(col("__m"))).head()
     val (nDocs, removed) = (dlStats.getLong(0), dlStats.getLong(1))
     if (removed == 0L) return 0L
-    val path = new org.apache.hadoop.fs.Path(dir)
     if (removed == nDocs) { // whole corpus retracted: un-commit
       // stats marker FIRST — from here every reader refuses cleanly; a
       // crash before the table deletes leaves unmarked residue the next
@@ -257,38 +246,35 @@ object Retrieval {
       // tables before the marker, leaving a committed-looking index with
       // data missing — r10 advice)
       fs.delete(statsPath, true)
-      fs.delete(path, true)
+      fs.delete(store.root, true)
       return removed
     }
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__forget")
-    fs.delete(tmp, true)
-    // the build discipline: each derived table from the one WRITTEN
-    // before it; stats lands LAST inside the temp (a crash mid-rewrite
-    // leaves an uncommitted temp, never a half-derived live index)
-    spark.read.parquet(s"$dir/postings").join(keys, Seq(idCol), "left_anti")
-      .write.mode("overwrite").parquet(s"$tmp/postings")
-    val post = spark.read.parquet(s"$tmp/postings")
-    post.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
-      .write.mode("overwrite").parquet(s"$tmp/doc_len")
-    post.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$tmp/doc_freq")
-    val statsRow = spark.read.parquet(s"$tmp/doc_len")
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl")).head()
-    Seq((statsRow.getLong(0), statsRow.getDouble(1), idCol))
-      .toDF("n_docs", "avgdl", "id_col")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/stats")
-    StoreProtocol.swapInto(fs, tmp, path, "forgetBm25")
+    StoreProtocol.rewrite(fs, store.root, "__forget", "forgetBm25") { tmp =>
+      // the build discipline: each derived table from the one WRITTEN
+      // before it; stats lands LAST inside the temp (a crash mid-rewrite
+      // leaves an uncommitted temp, never a half-derived live index)
+      spark.read.parquet(s"$dir/postings").join(keys, Seq(idCol), "left_anti")
+        .write.mode("overwrite").parquet(s"$tmp/postings")
+      val post = spark.read.parquet(s"$tmp/postings")
+      post.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
+        .write.mode("overwrite").parquet(s"$tmp/doc_len")
+      post.groupBy(col("token")).agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(s"$tmp/doc_freq")
+      val statsRow = spark.read.parquet(s"$tmp/doc_len")
+        .agg(count(lit(1)).as("n_docs"),
+          (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl")).head()
+      Seq((statsRow.getLong(0), statsRow.getDouble(1), idCol))
+        .toDF("n_docs", "avgdl", "id_col")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/stats")
+    }
     removed
   }
 
   def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                         queryTerms: DataFrame, k: Int,
                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    healIndex(spark, dir)
-    val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(statsPath),
+    val store = StoreProtocol.open(spark, dir)
+    require(store.fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")),
       s"bm25TopKFromIndex: no committed index at $dir (stats marker absent)")
     val stats = spark.read.parquet(s"$dir/stats").head()
     val idCol = stats.getString(2)
@@ -408,15 +394,14 @@ object Retrieval {
                             bloomBudget: Double = 1e-2,
                             idRange: Option[(Long, Long)] = None): Long = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StoreProtocol.heal(fs, root)
+    val store = StoreProtocol.open(spark, dir)
+    val fs = store.fs
     // layout guard: appending ingest partitions INTO a flat-layout index
     // (buildBm25Index's stats marker present) would corrupt both formats
     require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")),
       s"appendBm25Incremental: $dir holds a FLAT index (stats marker) — " +
         "build with buildBm25Incremental, or keep serving it via bm25TopKFromIndex")
-    val committed = StoreProtocol.committedKeys(fs, root)
+    val committed = store.keys
     // the index's fpp is PINNED at the first ingest (meta carries it
     // beside the id column): every later append's blooms and the
     // consolidation's survivor bloom are built at the pinned rate, so an
@@ -426,11 +411,10 @@ object Retrieval {
     val fpp =
       if (committed.isEmpty) bloomFpp
       else {
-        val meta = spark.read.parquet(s"$dir/meta")
-        require(meta.head().getString(0) == idCol,
+        require(store.meta.getString(0) == idCol,
           s"appendBm25Incremental: index is keyed on " +
-            s"'${meta.head().getString(0)}', got '$idCol'")
-        StoreProtocol.pinnedFpp(meta)
+            s"'${store.meta.getString(0)}', got '$idCol'")
+        StoreProtocol.pinnedFpp(store.meta)
       }
     require(idGuard == "exact" || idGuard == "bloom",
       s"appendBm25Incremental: unknown idGuard '$idGuard' (exact | bloom)")
@@ -473,9 +457,7 @@ object Retrieval {
         // parquet row-group stats — the read tracks the row groups the
         // batch's window overlaps, not the corpus (the
         // RetrievePipeline.append packed-chunk-id argument)
-        val committedIds = spark.read
-          .parquet(committed.map(k => s"$dir/doc_len/ingest=$k"): _*)
-          .select(col(idCol))
+        val committedIds = store.read("doc_len").select(col(idCol))
         val pruned = idRange match {
           case Some((lo, hi)) =>
             committedIds.filter(col(idCol).between(lo, hi))
@@ -498,47 +480,38 @@ object Retrieval {
       StoreProtocol.contentHash(col(idCol).cast("string"))).head()
     val admitted = statsRow.getLong(0)
     if (admitted == 0L) return 0L
-    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
-      statsRow.getString(2))
-    // a crashed append's orphans: an interleaved commit bumps the
-    // generation, so its retry writes a NEW key and the old unmarked
-    // partitions would otherwise linger until the next consolidation
-    // (r10 second-review catch)
-    StoreProtocol.sweepUnmarked(fs, root,
-      Seq("postings", "doc_len", "doc_freq", "stats_parts", "id_bloom"))
-    // the five per-ingest artifacts derive from the two checkpointed
-    // frames and land in DISJOINT subdirectories — independent legs, so
-    // they overlap (guide §2.6: the sequential chain paid five
-    // planning + commit-protocol round-trips back to back); meta and
-    // the commit marker still come strictly AFTER every leg
-    graft.Par.awaitAll(
-      graft.Par.run(
-        post.write.mode("overwrite").parquet(s"$dir/postings/ingest=$key")),
-      graft.Par.run(
-        docLen.write.mode("overwrite").parquet(s"$dir/doc_len/ingest=$key")),
-      graft.Par.run(
-        post.groupBy(col("token")).agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$dir/doc_freq/ingest=$key")),
-      graft.Par.run(
-        Seq((admitted, statsRow.getLong(1)))
-          .toDF("n_docs", "sum_dl")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/stats_parts/ingest=$key")),
-      // the ingest's own id bloom, written whether or not THIS append
-      // used it: every ingest carrying one is what keeps the index
-      // bloom-guardable for all future appends (batch-sized aggregate +
-      // a file of ~1.2 bytes/doc at fpp 1e-4)
-      graft.Par.run(
-        writeBloom(fs, s"$dir/id_bloom/ingest=$key",
-          docLen.select(xxhash64(col(idCol).cast("string")).as("__h"))
-            .stat.bloomFilter("__h", admitted, fpp))))
-    // meta BEFORE the ingest marker (StoreProtocol.commit)
-    if (committed.isEmpty)
-      Seq((idCol, fpp)).toDF("id_col", "bloom_fpp")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    StoreProtocol.commit(fs, root, key)
+    StoreProtocol.ingest(store, Bm25Tables, store.nextKey("i", statsRow.getString(2)),
+        Some(Seq((idCol, fpp)).toDF("id_col", "bloom_fpp"))) { at =>
+      // the five per-ingest artifacts derive from the two checkpointed
+      // frames and land in DISJOINT subdirectories — independent legs, so
+      // they overlap (guide §2.6: the sequential chain paid five
+      // planning + commit-protocol round-trips back to back)
+      graft.Par.awaitAll(
+        graft.Par.run(post.write.mode("overwrite").parquet(at("postings"))),
+        graft.Par.run(docLen.write.mode("overwrite").parquet(at("doc_len"))),
+        graft.Par.run(
+          post.groupBy(col("token")).agg(count(lit(1)).as("df"))
+            .write.mode("overwrite").parquet(at("doc_freq"))),
+        graft.Par.run(
+          Seq((admitted, statsRow.getLong(1))).toDF("n_docs", "sum_dl")
+            .coalesce(1).write.mode("overwrite").parquet(at("stats_parts"))),
+        // the ingest's own id bloom, written whether or not THIS append
+        // used it: every ingest carrying one is what keeps the index
+        // bloom-guardable for all future appends (batch-sized aggregate +
+        // a file of ~1.2 bytes/doc at fpp 1e-4)
+        graft.Par.run(
+          writeBloom(fs, at("id_bloom"),
+            docLen.select(xxhash64(col(idCol).cast("string")).as("__h"))
+              .stat.bloomFilter("__h", admitted, fpp))))
+    }
     admitted
   }
+
+  /** The incremental index's per-ingest tables; they share each
+    * ingest's commit key (`id_bloom` holds one file per key).
+    */
+  private val Bm25Tables =
+    Seq("postings", "doc_len", "doc_freq", "stats_parts", "id_bloom")
 
   private[graft] def writeBloom(fs: org.apache.hadoop.fs.FileSystem, path: String,
                                 bloom: org.apache.spark.util.sketch.BloomFilter): Unit = {
@@ -563,13 +536,10 @@ object Retrieval {
   private[graft] def bm25GateInfo(spark: org.apache.spark.sql.SparkSession,
                                   dir: String,
                                   readFpp: Boolean): (Int, Double) = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = StoreProtocol.committedKeys(fs, root)
-    if (committed.isEmpty) (0, 0.0)
-    else (committed.length,
-      if (readFpp) StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta"))
-      else 0.0)
+    val store = StoreProtocol.open(spark, dir)
+    if (store.isEmpty) (0, 0.0)
+    else (store.keys.length,
+      if (readFpp) StoreProtocol.pinnedFpp(store.meta) else 0.0)
   }
 
   /** [[bm25TopK]] answered from the INCREMENTAL index: postings and
@@ -582,26 +552,20 @@ object Retrieval {
   def bm25TopKFromIncremental(spark: org.apache.spark.sql.SparkSession,
                               dir: String, queryTerms: DataFrame, k: Int,
                               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StoreProtocol.heal(fs, root)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    require(fs.exists(metaPath),
+    val store = StoreProtocol.open(spark, dir)
+    require(store.fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")),
       s"bm25TopKFromIncremental: no committed index at $dir (meta marker absent)")
-    val idCol = spark.read.parquet(s"$dir/meta").head().getString(0)
-    val committed = StoreProtocol.committedKeys(fs, root)
-    require(committed.nonEmpty,
+    val idCol = store.meta.getString(0)
+    require(!store.isEmpty,
       s"bm25TopKFromIncremental: empty index at $dir (all ingests retracted)")
-    def table(t: String) =
-      spark.read.parquet(committed.map(k0 => s"$dir/$t/ingest=$k0"): _*)
     val vocab = queryTerms.select(col("term").as("token")).distinct()
-    val docFreq = table("doc_freq")
+    val docFreq = store.read("doc_freq")
       .join(broadcast(vocab), Seq("token"), "left_semi")
       .groupBy(col("token")).agg(sum(col("df")).as("df"))
-    val statsRows = table("stats_parts").collect() // bounded: 1 row/ingest
+    val statsRows = store.read("stats_parts").collect() // bounded: 1 row/ingest
     val nDocs = statsRows.map(_.getLong(0)).sum
     val avgdl = statsRows.map(_.getLong(1)).sum.toDouble / nDocs
-    scoreBm25(table("postings"), table("doc_len"), docFreq,
+    scoreBm25(store.read("postings"), store.read("doc_len"), docFreq,
       nDocs, avgdl, idCol, queryTerms, k, k1, b)
   }
 
@@ -619,7 +583,7 @@ object Retrieval {
     // lane's swap; the lanes' own calls pass through (withLease is
     // re-entrant within one control flow — r12 verdict #5)
     Lease.withLease(spark, dir, "Retrieval.forgetBm25Incremental") {
-      consolidateBm25(spark, dir, Some(ids))
+      consolidateBm25(spark, StoreProtocol.open(spark, dir), Some(ids))
     }
 
   /** Fold the per-append ingest partitions into ONE retained partition
@@ -631,44 +595,35 @@ object Retrieval {
                              dir: String): (Int, Int) =
     // lease-guarded like [[forgetBm25Incremental]] (r12 verdict #5)
     Lease.withLease(spark, dir, "Retrieval.compactBm25Incremental") {
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      StoreProtocol.heal(fs, root)
-      val before = StoreProtocol.committedKeys(fs, root).length
+      val store = StoreProtocol.open(spark, dir)
+      val before = store.keys.length
       if (before <= 1) (before, before)
       else {
-        consolidateBm25(spark, dir, None)
+        consolidateBm25(spark, store, None)
         (before, 1)
       }
     }
 
   private def consolidateBm25(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, ids: Option[DataFrame]): Long = {
+                              store: StoreProtocol.Store,
+                              ids: Option[DataFrame]): Long = {
     import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StoreProtocol.heal(fs, root)
     // loud, not silent: retraction pointed at the WRONG layout must fail
     // (a flat index here has docs to forget — a silent 0 would lose them)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")),
-      s"forgetBm25Incremental/compact: $dir holds a FLAT index (stats " +
+    require(!store.fs.exists(new org.apache.hadoop.fs.Path(s"${store.dir}/stats")),
+      s"forgetBm25Incremental/compact: ${store.dir} holds a FLAT index (stats " +
         "marker) — use forgetBm25")
-    val committed = StoreProtocol.committedKeys(fs, root)
-    if (committed.isEmpty) return 0L
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    val metaRow = metaDf.head()
-    val idCol = metaRow.getString(0)
+    if (store.isEmpty) return 0L
+    val idCol = store.meta.getString(0)
     // the survivor bloom rebuilds at the index's PINNED fpp (meta) — a
     // hardcoded rate here silently degraded a 1e-6 index to 1e-4 after
     // every compaction or forget (r11 advice); pre-pinning indexes
     // (meta without the column) keep the historical 1e-4
-    val fpp = StoreProtocol.pinnedFpp(metaDf)
-    def table(t: String) =
-      spark.read.parquet(committed.map(k => s"$dir/$t/ingest=$k"): _*)
+    val fpp = StoreProtocol.pinnedFpp(store.meta)
     val keep: DataFrame => DataFrame = ids match {
       case Some(f) =>
         // same index-key-type cast as forgetBm25 (no double coercion)
-        val keyType = table("doc_len").schema(idCol).dataType
+        val keyType = store.read("doc_len").schema(idCol).dataType
         val keys = (if (f.columns.length == 1)
             f.select(col(f.columns.head).cast(keyType).as(idCol))
           else f.select(col(idCol).cast(keyType))).distinct()
@@ -676,47 +631,44 @@ object Retrieval {
         df => df.join(keys, Seq(idCol), "left_anti")
       case None => identity
     }
-    val docLen = keep(table("doc_len"))
+    val docLen = keep(store.read("doc_len"))
     val stats = docLen.agg(count(lit(1)), sum(col("dl")),
       StoreProtocol.contentHash(col(idCol).cast("string"))).head()
     val survivors = stats.getLong(0)
     val removedTotal = // docs before minus after (stats partials are exact)
-      table("stats_parts").collect().map(_.getLong(0)).sum - survivors
+      store.read("stats_parts").collect().map(_.getLong(0)).sum - survivors
     if (ids.isDefined && removedTotal == 0L) return 0L
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__consolidate")
-    fs.delete(tmp, true)
-    fs.mkdirs(tmp) // all-retracted leaves it empty: the swap un-commits
-    if (survivors > 0L) {
-      val key = StoreProtocol.ingestKey("r", StoreProtocol.nextGen(committed),
-        stats.getString(2))
-      keep(table("postings")).write.mode("overwrite")
-        .parquet(s"$tmp/postings/ingest=$key")
-      docLen.write.mode("overwrite").parquet(s"$tmp/doc_len/ingest=$key")
-      // df re-derives from the WRITTEN surviving postings (the build
-      // discipline — one ingest-union scan total; subtracting partials
-      // would be wrong anyway: a retracted doc's tokens must leave df
-      // exactly)
-      spark.read.parquet(s"$tmp/postings/ingest=$key").groupBy(col("token"))
-        .agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$tmp/doc_freq/ingest=$key")
-      Seq((survivors, stats.getLong(1))).toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$tmp/stats_parts/ingest=$key")
-      // the survivor bloom, REBUILT from scratch (blooms are not
-      // invertible, so a forget must not carry stale bits — a retracted
-      // doc's id lingering in a bloom would block its re-admission, the
-      // exact veto forget exists to lift); also what re-arms the bloom
-      // guard for indexes whose earlier appends predate it
-      writeBloom(fs, s"$tmp/id_bloom/ingest=$key",
-        spark.read.parquet(s"$tmp/doc_len/ingest=$key")
-          .select(xxhash64(col(idCol).cast("string")).as("__h"))
-          .stat.bloomFilter("__h", survivors, fpp))
-      spark.read.parquet(s"$dir/meta")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-      StoreProtocol.commit(fs, tmp, key)
+    StoreProtocol.rewrite(store.fs, store.root, "__consolidate",
+        "consolidateBm25") { tmp =>
+      // all retracted → tmp stays empty: the swap un-commits the index
+      store.fs.mkdirs(tmp)
+      if (survivors > 0L)
+        StoreProtocol.ingest(store.emptyAt(tmp), Bm25Tables,
+            store.nextKey("r", stats.getString(2)),
+            Some(spark.createDataFrame(
+              java.util.Collections.singletonList(store.meta), store.meta.schema))) { at =>
+          keep(store.read("postings")).write.mode("overwrite").parquet(at("postings"))
+          docLen.write.mode("overwrite").parquet(at("doc_len"))
+          // df re-derives from the WRITTEN surviving postings (the build
+          // discipline — one ingest-union scan total; subtracting partials
+          // would be wrong anyway: a retracted doc's tokens must leave df
+          // exactly)
+          spark.read.parquet(at("postings")).groupBy(col("token"))
+            .agg(count(lit(1)).as("df"))
+            .write.mode("overwrite").parquet(at("doc_freq"))
+          Seq((survivors, stats.getLong(1))).toDF("n_docs", "sum_dl")
+            .coalesce(1).write.mode("overwrite").parquet(at("stats_parts"))
+          // the survivor bloom, REBUILT from scratch (blooms are not
+          // invertible, so a forget must not carry stale bits — a retracted
+          // doc's id lingering in a bloom would block its re-admission, the
+          // exact veto forget exists to lift); also what re-arms the bloom
+          // guard for indexes whose earlier appends predate it
+          writeBloom(store.fs, at("id_bloom"),
+            spark.read.parquet(at("doc_len"))
+              .select(xxhash64(col(idCol).cast("string")).as("__h"))
+              .stat.bloomFilter("__h", survivors, fpp))
+        }
     }
-    // all retracted → tmp stays empty: the swap un-commits the index
-    StoreProtocol.swapInto(fs, tmp, root, "consolidateBm25")
     removedTotal
   }
 

@@ -54,31 +54,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SketchStore {
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Heal a [[compact]] crashed between its two renames (`dir` gone,
-    * `dir__old` holding all history) by renaming the old directory
-    * back. Every access path must run this BEFORE touching `dir` —
-    * including the per-batch WRITE: a replayed micro-batch writing
-    * `batch=<id>` into a missing `dir` would otherwise recreate the
-    * directory containing only that one partition, the `!exists` heal
-    * here could then never fire, and the next compaction's
-    * `delete(dir__old)` would silently erase every pre-crash sketch
-    * partition (r9 advice).
-    */
-  def heal(spark: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    StoreProtocol.heal(fsOf(spark, path), path)
-  }
-
-  /** The per-micro-batch sketch write, heal-first (see [[heal]]):
-    * overwrite-by-batchId into `dir/batch=<id>` — the effectively-once
-    * contract the streaming ingests document.
+  /** The per-micro-batch sketch write: overwrite-by-batchId into
+    * `dir/batch=<id>` — the effectively-once contract the streaming
+    * ingests document. It opens (heals) the store first, like every
+    * access path: a replayed micro-batch writing `batch=<id>` into a
+    * `dir` parked at `__old` by a crashed [[compact]] would otherwise
+    * recreate the directory holding only that one partition, the heal
+    * could then never fire, and the next compaction's `delete(dir__old)`
+    * would silently erase every pre-crash sketch partition (r9 advice).
     */
   def append(spark: SparkSession, dir: String, sketch: DataFrame,
              batchId: Long): Unit = {
-    heal(spark, dir)
+    StoreProtocol.open(spark, dir)
     sketch.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
   }
 
@@ -87,7 +74,7 @@ object SketchStore {
     * healing a compaction crashed mid-swap first.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    heal(spark, dir)
+    StoreProtocol.open(spark, dir)
     spark.read.parquet(dir)
   }
 
@@ -99,10 +86,8 @@ object SketchStore {
     */
   def compact(spark: SparkSession, dir: String,
               merge: DataFrame => DataFrame): (Int, Int) = {
-    heal(spark, dir)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, path)
-    val parts = fs.listStatus(path)
+    val store = StoreProtocol.open(spark, dir)
+    val parts = store.fs.listStatus(store.root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
     val names = parts.map(_.getPath.getName.stripPrefix("batch="))
     val numeric = names.filter(_.forall(_.isDigit)).map(_.toLong)
@@ -110,13 +95,13 @@ object SketchStore {
     val newest = numeric.max
     val olderPaths = parts.map(_.getPath)
       .filter(_.getName != s"batch=$newest").map(_.toString)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compact")
-    fs.delete(tmp, true)
-    merge(spark.read.parquet(olderPaths.toIndexedSeq: _*))
-      .write.mode("overwrite").parquet(s"$tmp/batch=c$newest")
-    spark.read.parquet(s"$dir/batch=$newest")
-      .write.mode("overwrite").parquet(s"$tmp/batch=$newest")
-    StoreProtocol.swapInto(fs, tmp, path, "SketchStore.compact")
+    StoreProtocol.rewrite(store.fs, store.root, "__compact",
+        "SketchStore.compact") { tmp =>
+      merge(spark.read.parquet(olderPaths.toIndexedSeq: _*))
+        .write.mode("overwrite").parquet(s"$tmp/batch=c$newest")
+      spark.read.parquet(s"$dir/batch=$newest")
+        .write.mode("overwrite").parquet(s"$tmp/batch=$newest")
+    }
     (parts.length, 2)
   }
 }

@@ -70,18 +70,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SpanStore {
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The per-ingest tables; they share each ingest's commit key. */
   private val Tables = Seq("span_docs", "doc_ids")
 
-  private def metaOf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/meta")
+  /** The store's keying (id column, k), refusing a caller's mismatch. */
+  private def keyedAs(store: StoreProtocol.Store, op: String, idCol: String,
+                      k: Int): Unit = {
+    val (storedId, storedK) = (store.meta.getAs[String]("id_col"),
+      store.meta.getAs[Int]("k"))
+    require(storedId == idCol && storedK == k,
+      s"SpanStore.$op: store at ${store.dir} is keyed ($storedId, k=$storedK), " +
+        s"got ($idCol, k=$k) — span hashes across k values do not mix")
+  }
 
-  private def readMeta(spark: SparkSession, dir: String): (String, Int) = {
-    val row = metaOf(spark, dir).select("id_col", "k").head()
-    (row.getString(0), row.getInt(1))
+  private def metaFrame(spark: SparkSession, idCol: String, k: Int,
+                        buckets: Int): DataFrame = {
+    import spark.implicits._
+    require(buckets >= 1, s"SpanStore: lsmBuckets must be >= 1, got $buckets")
+    Seq((idCol, k, buckets)).toDF("id_col", "k", "lsm_buckets")
   }
 
   /** The batch's per-shingle distinct-doc partial. */
@@ -93,12 +99,10 @@ object SpanStore {
     * ([[StoreProtocol.readLsm]]): flat append tail read whole, bucketed
     * compacted base pruned to `touched` buckets.
     */
-  private def readPartials(spark: SparkSession, dir: String,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           committed: Seq[String],
-                           touched: Option[Seq[Int]],
-                           buckets: Int = StoreProtocol.DefaultLsmBuckets): DataFrame =
-    StoreProtocol.readLsm(spark, fs, s"$dir/span_docs", committed,
+  private def readPartials(spark: SparkSession, store: StoreProtocol.Store,
+                           keys: Seq[String], touched: Option[Seq[Int]],
+                           buckets: Int): DataFrame =
+    StoreProtocol.readLsm(spark, store.fs, s"${store.dir}/span_docs", keys,
       Seq("shingle", "n_docs"), touched, buckets)
 
   /** Ingest a batch: docs whose id is already committed are dropped (K2
@@ -135,27 +139,15 @@ object SpanStore {
              textCol: String, idCol: String = "doc_id", k: Int = 8,
              spans: Option[DataFrame] = None,
              lsmBuckets: Int = StoreProtocol.DefaultLsmBuckets): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
-    if (committed.nonEmpty) {
-      val (storedId, storedK) = readMeta(spark, dir)
-      require(storedId == idCol && storedK == k,
-        s"SpanStore.append: store at $dir is keyed ($storedId, k=$storedK), " +
-          s"got ($idCol, k=$k) — span hashes across k values do not mix")
-    }
-    // a crashed append's orphans (an interleaved commit bumps the
-    // generation, so its retry writes a NEW key)
-    StoreProtocol.sweepUnmarked(fs, root, Tables)
+    val store = StoreProtocol.open(spark, dir)
+    if (!store.isEmpty) keyedAs(store, "append", idCol, k)
     val incoming0 = docs.select(col(idCol), col(textCol))
     val incoming =
-      if (committed.isEmpty) incoming0
+      if (store.isEmpty) incoming0
       else {
         val w = incoming0.agg(min(col(idCol)), max(col(idCol))).head()
         if (w.isNullAt(0)) return 0L
-        val gate = spark.read
-          .parquet(committed.map(c => s"$dir/doc_ids/ingest=$c"): _*)
+        val gate = store.read("doc_ids")
           .filter(col(idCol).between(lit(w.get(0)), lit(w.get(1))))
         incoming0.join(gate, Seq(idCol), "left_anti")
       }
@@ -172,23 +164,16 @@ object SpanStore {
       .head()
     val admitted = stats.getLong(0)
     if (admitted == 0L) return 0L
-    val key = StoreProtocol.ingestKey("i", StoreProtocol.nextGen(committed),
-      stats.getString(1))
-    // disjoint ingest dirs off materialized inputs — overlap the writes
-    // (unmarked dirs stay invisible whatever subset a crash leaves)
-    graft.Par.awaitAll(
-      graft.Par.run(partialOf(sp, idCol).write.mode("overwrite")
-        .parquet(s"$dir/span_docs/ingest=$key")),
-      graft.Par.run(
-        admittedIds.write.mode("overwrite").parquet(s"$dir/doc_ids/ingest=$key")))
-    if (committed.isEmpty) {
-      import spark.implicits._
-      require(lsmBuckets >= 1,
-        s"SpanStore.append: lsmBuckets must be >= 1, got $lsmBuckets")
-      Seq((idCol, k, lsmBuckets)).toDF("id_col", "k", "lsm_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    StoreProtocol.ingest(store, Tables, store.nextKey("i", stats.getString(1)),
+        Some(metaFrame(spark, idCol, k, lsmBuckets))) { at =>
+      // disjoint ingest dirs off materialized inputs — overlap the writes
+      // (unmarked dirs stay invisible whatever subset a crash leaves)
+      graft.Par.awaitAll(
+        graft.Par.run(partialOf(sp, idCol).write.mode("overwrite")
+          .parquet(at("span_docs"))),
+        graft.Par.run(
+          admittedIds.write.mode("overwrite").parquet(at("doc_ids"))))
     }
-    StoreProtocol.commit(fs, root, key)
     admitted
   }
 
@@ -208,19 +193,13 @@ object SpanStore {
   def probe(spark: SparkSession, dir: String, batch: DataFrame,
             textCol: String, idCol: String = "doc_id", k: Int = 8,
             minDocs: Int = 2, spans: Option[DataFrame] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
+    val store = StoreProtocol.open(spark, dir)
+    val committed = store.keys
     val pinnedBuckets =
-      if (committed.isEmpty) StoreProtocol.DefaultLsmBuckets
+      if (store.isEmpty) StoreProtocol.DefaultLsmBuckets
       else {
-        val meta = metaOf(spark, dir)
-        val row = meta.select("id_col", "k").head()
-        require(row.getString(0) == idCol && row.getInt(1) == k,
-          s"SpanStore.probe: store at $dir is keyed (${row.getString(0)}, " +
-            s"k=${row.getInt(1)}), got ($idCol, k=$k)")
-        StoreProtocol.pinnedLsmBuckets(meta)
+        keyedAs(store, "probe", idCol, k)
+        StoreProtocol.pinnedLsmBuckets(store.meta)
       }
     // feeds the vocabulary, the batch partial and the occurrence join —
     // eager localCheckpoint (the ngramJaccard reclaim argument); a
@@ -239,7 +218,7 @@ object SpanStore {
         val touched =
           StoreProtocol.touchedLsmBuckets(sp, "shingle", pinnedBuckets)
         val committedCnt =
-          readPartials(spark, dir, fs, committed, Some(touched), pinnedBuckets)
+          readPartials(spark, store, committed, Some(touched), pinnedBuckets)
           .join(broadcast(sp.select(col("shingle")).distinct()),
             Seq("shingle"), "left_semi")
           .groupBy(col("shingle")).agg(sum(col("n_docs")).as("n_docs"))
@@ -255,7 +234,7 @@ object SpanStore {
         // probe.
         val w = batch.agg(min(col(idCol)), max(col(idCol))).head()
         val overlap = batch.select(col(idCol), col(textCol)).join(
-          spark.read.parquet(committed.map(c => s"$dir/doc_ids/ingest=$c"): _*)
+          store.read("doc_ids", committed)
             .filter(col(idCol).between(lit(w.get(0)), lit(w.get(1)))),
           Seq(idCol), "left_semi")
         val overlapCnt = partialOf(
@@ -306,24 +285,21 @@ object SpanStore {
     // (withLease is re-entrant within one control flow)
     Lease.withLease(spark, dir, "SpanStore.compact") {
       require(maxGens >= 1, s"SpanStore.compact: maxGens >= 1, got $maxGens")
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = fsOf(spark, root)
-      StoreProtocol.heal(fs, root)
-      StoreProtocol.sweepSuperseded(fs, root, Tables)
-      val keys = StoreProtocol.visibleKeys(fs, root)
-      val before = keys.length
+      val store = StoreProtocol.open(spark, dir)
+      StoreProtocol.sweepSuperseded(store.fs, store.root, Tables)
+      val before = store.keys.length
       if (before == 0) (0, 0)
       else {
-        val pinned = StoreProtocol.pinnedLsmBuckets(metaOf(spark, dir))
+        val pinned = StoreProtocol.pinnedLsmBuckets(store.meta)
         val migrating = lsmBuckets > 0 && lsmBuckets != pinned
         if (migrating) {
-          consolidate(spark, dir, None, Some(lsmBuckets))
+          consolidate(spark, store, None, Some(lsmBuckets))
           (before, 1)
         } else {
-          val plan = StoreProtocol.planFold(fs, s"$dir/span_docs", keys,
-            maxGens, "r")
+          val plan = StoreProtocol.planFold(store.fs, s"$dir/span_docs",
+            store.keys, maxGens, "r")
           if (!plan.due) (before, before)
-          else (before, consolidateIncremental(spark, dir, fs, root, plan, pinned))
+          else (before, consolidateIncremental(spark, store, plan, pinned))
         }
       }
     }
@@ -339,21 +315,19 @@ object SpanStore {
     * folds those generations together. Returns the visible ingest count
     * after the flip.
     */
-  private def consolidateIncremental(spark: SparkSession, dir: String,
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      plan: StoreProtocol.FoldPlan, buckets: Int): Int = {
+  private def consolidateIncremental(spark: SparkSession,
+      store: StoreProtocol.Store, plan: StoreProtocol.FoldPlan,
+      buckets: Int): Int = {
     import plan.{flat, folded, key, retired}
     val tail =
       if (flat.isEmpty) None
-      else Some(spark.read
-        .parquet(flat.map(k => s"$dir/span_docs/ingest=$k"): _*)
+      else Some(store.read("span_docs", flat)
         .select(col("shingle"), col("n_docs")))
     // the folded small generations read WHOLE (they are the fold's own
     // cost, chosen smallest-first); live generations are never opened
     val foldedRows =
       if (folded.isEmpty) None
-      else Some(StoreProtocol.readLsm(spark, fs, s"$dir/span_docs", folded,
-        Seq("shingle", "n_docs"), touched = None, buckets))
+      else Some(readPartials(spark, store, folded, touched = None, buckets))
     val merged = (tail.toSeq ++ foldedRows.toSeq) match {
       case Nil =>
         // a fold of marker-empty generations (zero-span corpus): a typed
@@ -366,12 +340,11 @@ object SpanStore {
       case pieces => pieces.reduce(_.unionByName(_))
         .groupBy(col("shingle")).agg(sum(col("n_docs")).as("n_docs"))
     }
-    val carried = spark.read
-      .parquet(retired.map(k => s"$dir/doc_ids/ingest=$k"): _*)
     StoreProtocol.writeLsmBase(merged, "shingle",
-      s"$dir/span_docs/ingest=$key", buckets)
-    carried.write.mode("overwrite").parquet(s"$dir/doc_ids/ingest=$key")
-    StoreProtocol.commitIncremental(fs, root, Tables, key, retired)
+      store.ingestDir("span_docs", key), buckets)
+    store.read("doc_ids", retired)
+      .write.mode("overwrite").parquet(store.ingestDir("doc_ids", key))
+    StoreProtocol.commitIncremental(store.fs, store.root, Tables, key, retired)
     plan.live.length + 1
   }
 
@@ -388,28 +361,22 @@ object SpanStore {
              textCol: String, idCol: String = "doc_id"): Long =
     // lease-guarded like [[compact]] (r12 verdict #5)
     Lease.withLease(spark, dir, "SpanStore.forget") {
-      consolidate(spark, dir,
+      consolidate(spark, StoreProtocol.open(spark, dir),
         Some(retracted.select(col(idCol), col(textCol))))
     }
 
-  private def consolidate(spark: SparkSession, dir: String,
+  private def consolidate(spark: SparkSession, store: StoreProtocol.Store,
                           drop: Option[DataFrame],
                           migrateBuckets: Option[Int] = None): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, root)
-    StoreProtocol.heal(fs, root)
-    val committed = StoreProtocol.visibleKeys(fs, root)
-    if (committed.isEmpty) return 0L
-    val (idCol, k) = readMeta(spark, dir)
-    val buckets =
-      migrateBuckets.getOrElse(StoreProtocol.pinnedLsmBuckets(metaOf(spark, dir)))
-    def table(t: String) =
-      spark.read.parquet(committed.map(c => s"$dir/$t/ingest=$c"): _*)
-    val summed = readPartials(spark, dir, fs, committed, touched = None)
+    if (store.isEmpty) return 0L
+    val (idCol, k) = (store.meta.getAs[String]("id_col"), store.meta.getAs[Int]("k"))
+    val pinned = StoreProtocol.pinnedLsmBuckets(store.meta)
+    val buckets = migrateBuckets.getOrElse(pinned)
+    val summed = readPartials(spark, store, store.keys, touched = None, pinned)
       .groupBy(col("shingle")).agg(sum(col("n_docs")).as("n_docs"))
     // only docs actually committed decrement (a takedown list routinely
     // carries ids this store never ingested)
-    val gated = drop.map(_.join(table("doc_ids"), Seq(idCol), "left_semi")
+    val gated = drop.map(_.join(store.read("doc_ids"), Seq(idCol), "left_semi")
       .localCheckpoint(true))
     val removed = gated.map(_.select(col(idCol)).distinct().count())
       .getOrElse(0L)
@@ -445,31 +412,26 @@ object SpanStore {
     }
     val survivorIds = gated match {
       case Some(g) =>
-        table("doc_ids").join(g.select(col(idCol)), Seq(idCol), "left_anti")
-      case None => table("doc_ids")
+        store.read("doc_ids").join(g.select(col(idCol)), Seq(idCol), "left_anti")
+      case None => store.read("doc_ids")
     }
     val stats = survivorIds
       .agg(count(lit(1)), StoreProtocol.contentHash(col(idCol).cast("string")))
       .head()
-    val survivors = stats.getLong(0)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__consolidate")
-    fs.delete(tmp, true)
-    fs.mkdirs(tmp) // all-retracted leaves it empty: the swap un-commits
-    if (survivors > 0L) {
-      val key = StoreProtocol.ingestKey("r", StoreProtocol.nextGen(committed),
-        stats.getString(1))
-      // the consolidated base lands BUCKETED (bucket = shingle mod the
-      // store's pinned count) so probes prune it by construction; a
-      // migration re-pins the meta in the SAME swap as the new layout
-      StoreProtocol.writeLsmBase(merged, "shingle",
-        s"$tmp/span_docs/ingest=$key", buckets)
-      survivorIds.write.mode("overwrite").parquet(s"$tmp/doc_ids/ingest=$key")
-      metaOf(spark, dir).select("id_col", "k")
-        .withColumn("lsm_buckets", lit(buckets))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-      StoreProtocol.commit(fs, tmp, key)
+    StoreProtocol.rewrite(store.fs, store.root, "__consolidate",
+        "SpanStore.consolidate") { tmp =>
+      store.fs.mkdirs(tmp) // all-retracted leaves it empty: the swap un-commits
+      if (stats.getLong(0) > 0L)
+        StoreProtocol.ingest(store.emptyAt(tmp), Tables,
+            store.nextKey("r", stats.getString(1)),
+            Some(metaFrame(spark, idCol, k, buckets))) { at =>
+          // the consolidated base lands BUCKETED (bucket = shingle mod the
+          // store's pinned count) so probes prune it by construction; a
+          // migration re-pins the meta in the SAME swap as the new layout
+          StoreProtocol.writeLsmBase(merged, "shingle", at("span_docs"), buckets)
+          survivorIds.write.mode("overwrite").parquet(at("doc_ids"))
+        }
     }
-    StoreProtocol.swapInto(fs, tmp, root, "SpanStore.consolidate")
     removed
   }
 }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * chains, pinned moduli, gate bases, leases and the `__lease_risk`
   * stuck-shutdown marker) surfaces here as ONE queryable row per store.
   *
-  * Cost shape: directory listings plus two one-row meta reads per store
+  * Cost shape: directory listings plus one one-row meta read per store
   * — no data file is ever opened, so the scan is O(|stores| × dirents)
   * regardless of corpus size. Read-only by construction (safe beside a
   * live lane; the one raciness is the same transient a store swap always
-  * presents to readers).
+  * presents to readers): a store parked mid-swap reads from its
+  * `__old` directory in place.
   *
   * Columns (null = not applicable to that store's shape):
   *  - `store`               caller-given name
@@ -68,45 +69,47 @@ object StoreHealth {
       spark.sparkContext.parallelize(rows, 1), schema)
   }
 
+  /** The row of the store at `dir`, or of `dir__old` when a crash
+    * parked it mid-swap: read in place through [[StoreProtocol.peek]],
+    * never healed, so the scan cannot race a live writer's swap.
+    */
   private def rowOf(spark: SparkSession, name: String, dir: String): Row = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root))
+    val store = StoreProtocol.peek(spark, dir).getOrElse {
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       return Row(name, 0, 0, 0, 0, 0, 0, null, null, null,
         riskHolderOf(fs, dir).orNull)
-    val committed = StoreProtocol.committedKeys(fs, root)
-    val visible = StoreProtocol.visibleKeys(fs, root)
+    }
+    val (fs, at) = (store.fs, store.dir)
+    val visible = store.keys
     val pending = {
-      val sup = new Path(root, "_supersedes")
+      val sup = new Path(store.root, "_supersedes")
       if (fs.exists(sup)) fs.listStatus(sup).length else 0
     }
     // layout detection by the protocol's own table names: the hash-keyed
     // LSM stores split flat/bucketed on their primary table, every other
     // store on its gate_ids base (absent: every ingest is flat)
     val lsmTable = Seq("span_docs", "labels")
-      .find(t => fs.exists(new Path(root, t))).getOrElse("gate_ids")
+      .find(t => fs.exists(new Path(store.root, t))).getOrElse("gate_ids")
     val (gens, flat) =
-      StoreProtocol.splitLsmLayout(fs, s"$dir/$lsmTable", visible)
+      StoreProtocol.splitLsmLayout(fs, s"$at/$lsmTable", visible)
     val remapDepth = {
-      val r = new Path(root, "remap")
+      val r = new Path(store.root, "remap")
       if (!fs.exists(r)) 0
-      else visible.count(k => fs.exists(new Path(s"$dir/remap/ingest=$k")))
+      else visible.count(k => fs.exists(new Path(store.ingestDir("remap", k))))
     }
-    val metaP = new Path(root, "meta")
-    val gateMetaP = new Path(root, "gate_meta")
+    val gateMetaP = new Path(store.root, "gate_meta")
     val (buckets: Option[Int], gateIds: Option[Long]) =
-      if (fs.exists(metaP)) {
-        val m = spark.read.parquet(metaP.toString)
-        (Some(StoreProtocol.pinnedLsmBuckets(m)), None)
-      } else if (fs.exists(gateMetaP)) {
-        val m = spark.read.parquet(gateMetaP.toString)
+      if (fs.exists(new Path(store.root, "meta")))
+        (Some(StoreProtocol.pinnedLsmBuckets(store.meta)), None)
+      else if (fs.exists(gateMetaP)) {
+        val m = spark.read.parquet(gateMetaP.toString).head()
         val ids =
           if (m.schema.fieldNames.contains("committed_ids"))
-            Some(m.head().getLong(m.schema.fieldIndex("committed_ids")))
+            Some(m.getLong(m.fieldIndex("committed_ids")))
           else None
         (Some(StoreProtocol.pinnedLsmBuckets(m)), ids)
       } else (None, None)
-    Row(name, committed.length, visible.length, flat.length, gens.length,
+    Row(name, store.committed.length, visible.length, flat.length, gens.length,
       remapDepth, pending, buckets.orNull, gateIds.orNull,
       Lease.holderOf(spark, dir).map(_._1).orNull,
       riskHolderOf(fs, dir).orNull)

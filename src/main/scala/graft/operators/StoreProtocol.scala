@@ -2,47 +2,126 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
-/** The whole-directory crash protocol every persisted graft store shares
-  * — ONE implementation (the r10 code-review consolidation: five heal
-  * copies and four swap copies had to stay byte-for-byte consistent by
-  * hand before this).
+/** The lifecycle every persisted graft store runs, in ONE place: stores
+  * keep only their data transforms and reach the filesystem protocol
+  * through three entry points.
   *
-  * [[swapInto]] replaces a live directory with a fully-written temp in
-  * two renames: stage the live directory aside as `<path>__old`, move
-  * the temp in, roll back if the second rename fails — a reader sees the
-  * old or the new contents, never a mix, but there is a brief window
-  * where the path is ABSENT, and a crash inside it parks the store at
-  * `__old`. [[heal]] repairs exactly that state (path missing, `__old`
-  * present → rename back; the `__old` contents are the complete
-  * pre-swap store by construction) and must run before any read of a
-  * swap-managed directory. Single-writer: heal's existence check races
-  * a concurrent swap — the writers that tolerate the race document it
-  * (Warehouse.recoverStranded keeps its own variant for that reason:
-  * its overwrite retries until the writer wins).
+  *  - [[open]] takes a read-only [[Store]] view: it heals a crash parked
+  *    mid-swap, lists the visible ingest keys once and reads the
+  *    one-row `meta` table at most once, when asked.
+  *  - [[ingest]] lands one marked ingest: orphan sweep, the caller's
+  *    writes into `<table>/ingest=<key>` dirs, meta on a first commit,
+  *    then the commit marker.
+  *  - [[rewrite]] replaces a directory through a fully-written temp and
+  *    the `__old` two-rename swap; a whole-store consolidation is a
+  *    rewrite whose body is one [[ingest]] into the empty temp store.
   *
-  * The marker protocol (SpanStore, GraphStore, the incremental BM25
-  * index, the streaming gate stores) lives here too, write half and
-  * read half, so every protocol mutation has one implementation:
+  * The one order rule: nothing becomes visible before everything it
+  * depends on is durable. Data dirs, then meta (first commit only),
+  * then the marker; a fold writes its dirs, then its supersede note,
+  * then its marker, then cleans up; a swap writes the whole temp before
+  * its first rename. A crash at any step leaves unmarked or unswapped
+  * debris that readers never see and the next writer sweeps.
   *
-  *  - keys: [[contentHash]] (and its driver twin [[localContentHash]])
-  *    hashes an ingest's ids, [[nextGen]] picks the generation,
-  *    [[ingestKey]] joins them; [[keyHash]] names a fold's output;
-  *  - append: [[sweepUnmarked]] clears a crashed attempt's orphans,
-  *    [[commit]] writes the marker that makes an ingest visible;
-  *  - fold: [[planFold]] chooses what a tier fold retires
-  *    ([[tierFoldSelection]]), [[commitIncremental]] flips it live,
-  *    [[sweepSuperseded]] / [[cleanupRetired]] finish its cleanup;
-  *  - swap: [[swapInto]] and [[heal]];
-  *  - read: [[committedKeys]] (marked), [[visibleKeys]] (marked minus
-  *    superseded), [[hasCommitDir]], [[genOf]], and the LSM bucket pair
-  *    ([[readLsm]], [[writeLsmBase]]).
+  * The swap leaves a brief window where the path is ABSENT, and a crash
+  * inside it parks the store at `<path>__old`; [[open]] renames it back
+  * (the `__old` contents are the complete pre-swap store by
+  * construction). Single-writer: that existence check races a
+  * concurrent swap, so writers hold the store's lease, and the
+  * read-only [[peek]] reads a parked store in place instead of healing
+  * it (Warehouse.recoverStranded keeps its own variant: its overwrite
+  * retries until the writer wins). Leases stay with the callers: the
+  * template takes none.
+  *
+  * Below the entry points sit the marker protocol's parts: keys
+  * ([[contentHash]], [[nextGen]], [[ingestKey]], [[keyHash]]), the
+  * incremental fold ([[planFold]], [[commitIncremental]],
+  * [[sweepSuperseded]]) and the LSM bucket pair ([[readLsm]],
+  * [[writeLsmBase]]).
   */
 private[graft] object StoreProtocol {
 
-  /** Repair a [[swapInto]] crashed between its two renames. */
-  def heal(fs: FileSystem, path: Path): Unit = {
+  /** A read-only view of the store at `dir`, taken by [[open]] or
+    * [[peek]]. `keys` are the visible ingest keys, listed once at first
+    * use; `meta` is the store's one-row `meta` table, read once at first
+    * use (it exists once a key is committed).
+    */
+  final class Store private[StoreProtocol] (spark: SparkSession,
+      val fs: FileSystem, val root: Path, val dir: String,
+      listed: Option[Seq[String]]) {
+    lazy val keys: Seq[String] = listed.getOrElse(visibleKeys(fs, root))
+    /** Every committed key, superseded ones included. */
+    lazy val committed: Seq[String] = committedKeys(fs, root)
+    lazy val meta: Row = spark.read.parquet(s"$dir/meta").head()
+    def isEmpty: Boolean = keys.isEmpty
+    /** The ingest dir of `key` in `table`. */
+    def ingestDir(table: String, key: String): String = s"$dir/$table/ingest=$key"
+    /** `table` over `ks` (every visible key by default), one read. */
+    def read(table: String, ks: Seq[String] = keys): DataFrame =
+      spark.read.parquet(ks.map(ingestDir(table, _)): _*)
+    /** The key the next ingest takes: `<prefix><nextGen>_<hash>`. */
+    def nextKey(prefix: String, hash: String): String =
+      ingestKey(prefix, nextGen(keys), hash)
+    /** The empty store at `tmp`: a whole-store [[rewrite]]'s target. */
+    def emptyAt(tmp: Path): Store =
+      new Store(spark, fs, tmp, tmp.toString, Some(Nil))
+  }
+
+  /** Open the store at `dir`: heal a swap parked at `__old` — `dir`
+    * itself, or the `swapped` sub-dirs of a store that swaps tables
+    * rather than its whole directory — and return its view.
+    */
+  def open(spark: SparkSession, dir: String, swapped: String*): Store = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val healed = if (swapped.isEmpty) Seq(root) else swapped.map(new Path(root, _))
+    healed.foreach(heal(fs, _))
+    new Store(spark, fs, root, dir, None)
+  }
+
+  /** [[open]] without the heal, for readers that must not write: the
+    * view of `dir`, or of `dir__old` when a swap crashed between its
+    * renames; None when neither exists.
+    */
+  def peek(spark: SparkSession, dir: String): Option[Store] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new Path(dir + "__old")
+    Seq(root -> dir, old -> old.toString).find(p => fs.exists(p._1))
+      .map { case (p, d) => new Store(spark, fs, p, d, None) }
+  }
+
+  /** Land one ingest `key` into `store`, in the protocol's order: sweep
+    * a crashed attempt's unmarked `tables` dirs, run `write` (given each
+    * table's ingest dir for `key`), write `meta` when this is the
+    * store's first commit, then the marker.
+    */
+  def ingest(store: Store, tables: Seq[String], key: String,
+             meta: => Option[DataFrame] = None)
+            (write: (String => String) => Unit): Unit = {
+    sweepUnmarked(store.fs, store.root, tables)
+    write(store.ingestDir(_, key))
+    if (store.isEmpty) meta.foreach(
+      _.coalesce(1).write.mode("overwrite").parquet(s"${store.dir}/meta"))
+    commit(store.fs, store.root, key)
+  }
+
+  /** Replace `path` with what `fill` writes into the temp
+    * `<path><suffix>` (cleared first), through the `__old` two-rename
+    * swap; `op` names the caller in failure messages.
+    */
+  def rewrite(fs: FileSystem, path: Path, suffix: String, op: String)
+             (fill: Path => Unit): Unit = {
+    val tmp = new Path(path.toString + suffix)
+    fs.delete(tmp, true)
+    fill(tmp)
+    swapInto(fs, tmp, path, op)
+  }
+
+  /** Repair a swap crashed between its two renames. */
+  private def heal(fs: FileSystem, path: Path): Unit = {
     val old = new Path(path.toString + "__old")
     if (!fs.exists(path) && fs.exists(old)) fs.rename(old, path)
     ()
@@ -325,16 +404,16 @@ private[graft] object StoreProtocol {
     finally in.close()
   }
 
-  /** The pinned bloom fpp of a store's meta frame — the `bloom_fpp`
+  /** The pinned bloom fpp of a store's meta row — the `bloom_fpp`
     * column when present, else the historical 1e-4 default (pre-pinning
     * stores). ONE implementation: the serving stack, the incremental
     * BM25 index and the gate-info audit readers all pin at the same
     * rate, so a default drift cannot skew one of them (r13 review
     * catch: three hand-kept copies).
     */
-  def pinnedFpp(meta: DataFrame): Double =
+  def pinnedFpp(meta: Row): Double =
     if (meta.schema.fieldNames.contains("bloom_fpp"))
-      meta.head().getDouble(meta.schema.fieldIndex("bloom_fpp"))
+      meta.getDouble(meta.fieldIndex("bloom_fpp"))
     else 1e-4
 
   // ----------------------------------------------------- LSM bucket pair
@@ -388,17 +467,16 @@ private[graft] object StoreProtocol {
     */
   val MaxBaseGens = 8
 
-  /** The pinned bucket count of a store's meta frame — `lsm_buckets`
+  /** The pinned bucket count of a store's meta row — `lsm_buckets`
     * when present, else the historical 256 (pre-parameterization
     * stores, whose compacted base is mod-256 on disk). ONE
     * implementation, the pinnedFpp argument: every reader of one store
     * must pin the same modulus or the prune silently drops rows.
     */
-  def pinnedLsmBuckets(meta: DataFrame): Int =
-    if (meta.schema.fieldNames.contains("lsm_buckets")) {
-      val row = meta.head()
-      row.getInt(row.fieldIndex("lsm_buckets"))
-    } else DefaultLsmBuckets
+  def pinnedLsmBuckets(meta: Row): Int =
+    if (meta.schema.fieldNames.contains("lsm_buckets"))
+      meta.getInt(meta.fieldIndex("lsm_buckets"))
+    else DefaultLsmBuckets
 
   /** Split committed ingests of `tableDir` (e.g. `<dir>/span_docs`) by
     * on-disk layout — (bucketed base, flat tail). Self-describing: one
@@ -593,10 +671,12 @@ private[graft] object StoreProtocol {
     fs.create(new Path(path, s"_lsm_buckets_$buckets"), true).close()
   }
 
-  /** Replace `path` with the fully-written `tmp` through the `__old`
-    * two-rename swap; `op` names the caller in failure messages.
+  /** Replace `path` with the fully-written `tmp`: stage the live
+    * directory aside as `<path>__old`, move the temp in, roll back if the
+    * second rename fails — a reader sees the old or the new contents,
+    * never a mix.
     */
-  def swapInto(fs: FileSystem, tmp: Path, path: Path, op: String): Unit = {
+  private def swapInto(fs: FileSystem, tmp: Path, path: Path, op: String): Unit = {
     val old = new Path(path.toString + "__old")
     fs.delete(old, true)
     if (!fs.rename(path, old))

@@ -138,11 +138,10 @@ object RetrievePipeline {
     val bloomLeg = graft.Par.run(
       writePartBloom(fs, dir, "base", chunks,
         graft.Par.await(statsF).getLong(0), bloomFpp))
-    val stats = graft.Par.await(statsF)
-    stages += Stage("chunks", stats.getLong(0))
+    graft.Par.awaitAll(statsF, bm25Leg, annLeg, bloomLeg)
+    stages += Stage("chunks", graft.Par.await(statsF).getLong(0))
     stages += graft.Par.await(bm25Leg)
     stages += graft.Par.await(annLeg)
-    graft.Par.await(bloomLeg)
     // bloom_fpp rides at the END of meta: the four routing fields stay
     // at their historical positions, and pre-pinning stacks (no column)
     // read back as the historical 1e-4 default
@@ -297,7 +296,8 @@ object RetrievePipeline {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))) (0, 0.0)
     else (chunkParts(fs, dir).length,
-      if (readFpp) StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta")) else 0.0)
+      if (readFpp) StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta").head())
+      else 0.0)
   }
 
   /** One doc-id bloom over `chunksDf`'s distinct parent docs, written
@@ -414,24 +414,19 @@ object RetrievePipeline {
              dir: String, idGuard: String = "exact",
              bloomBudget: Double = 1e-2): Seq[Stage] = {
     val spark = docs.sparkSession
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
+    val store = StoreProtocol.open(spark, dir, "chunks", "vectors", "ann/corpus")
+    val fs = store.fs
+    require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")),
       s"RetrievePipeline.append: no committed build at $dir (meta marker absent)")
     require(!bm25IsFlat(spark, dir),
       s"RetrievePipeline.append: the stack at $dir carries the pre-switch " +
         "FLAT BM25 leg — rebuild once to the incremental layout before growing")
     require(idGuard == "exact" || idGuard == "bloom",
       s"RetrievePipeline.append: unknown idGuard '$idGuard' (exact | bloom)")
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    val meta = metaDf.head()
+    val meta = store.meta
     val (dim, salt, chunkTokens, stride) =
       (meta.getInt(0), meta.getString(1), meta.getInt(2), meta.getInt(3))
-    val fpp = StoreProtocol.pinnedFpp(metaDf)
-    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/chunks"))
-    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/vectors"))
-    StoreProtocol.heal(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/ann/corpus"))
+    val fpp = StoreProtocol.pinnedFpp(meta)
     // the batch's doc-id RANGE first: it is (a) the id-space
     // precondition, moved ahead of every store read so a bad batch
     // fails before costing anything, and (b) the prune key each
@@ -549,8 +544,8 @@ object RetrievePipeline {
         AnnIndex.appendIvf(newAnn, "embedding", "chunk_id", s"$dir/ann")
       n
     }
+    graft.Par.awaitAll(bm25Leg, vecLeg, annLeg)
     val bm25Chunks = graft.Par.await(bm25Leg)
-    graft.Par.await(vecLeg)
     val nAnn = graft.Par.await(annLeg)
     // 4. chunks LAST — the presence detector commits by ONE directory
     // rename (all of the batch's chunks or none, the MediaHashStore
@@ -605,34 +600,31 @@ object RetrievePipeline {
     }
 
   private def compactImpl(spark: SparkSession, dir: String): Unit = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
+    val store = StoreProtocol.open(spark, dir, "chunks", "vectors")
+    val fs = store.fs
+    require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")),
       s"RetrievePipeline.compact: no committed build at $dir (meta marker absent)")
     Seq("chunks", "vectors").foreach { table =>
       val path = new org.apache.hadoop.fs.Path(s"$dir/$table")
-      StoreProtocol.heal(fs, path)
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/${table}__compact")
-      fs.delete(tmp, true)
-      readTable(spark, path.toString)
-        .repartitionByRange(col("chunk_id"))
-        .sortWithinPartitions(col("chunk_id"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      // the per-batch doc blooms go BEFORE the chunk swap and the folded
-      // base bloom is rebuilt after: the fold moves every batch's docs
-      // under "base", and a stale pre-fold base bloom would read as
-      // authoritative for the folded part while missing the batch ids —
-      // re-admitting committed docs. A crash anywhere between leaves NO
-      // bloom for a committed part, which the next bloom-guarded append
-      // heals from the part's files (loadDocBlooms invariant).
-      if (table == "chunks")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/doc_blooms"), true)
-      StoreProtocol.swapInto(fs, tmp, path,
-        "RetrievePipeline.compact")
+      StoreProtocol.rewrite(fs, path, "__compact", "RetrievePipeline.compact") { tmp =>
+        readTable(spark, path.toString)
+          .repartitionByRange(col("chunk_id"))
+          .sortWithinPartitions(col("chunk_id"))
+          .write.mode("overwrite").parquet(tmp.toString)
+        // the per-batch doc blooms go BEFORE the chunk swap and the folded
+        // base bloom is rebuilt after: the fold moves every batch's docs
+        // under "base", and a stale pre-fold base bloom would read as
+        // authoritative for the folded part while missing the batch ids —
+        // re-admitting committed docs. A crash anywhere between leaves NO
+        // bloom for a committed part, which the next bloom-guarded append
+        // heals from the part's files (loadDocBlooms invariant).
+        if (table == "chunks")
+          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/doc_blooms"), true)
+      }
       if (table == "chunks") {
         val folded = readTable(spark, path.toString)
         writePartBloom(fs, dir, "base", folded, folded.count(),
-          StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta")))
+          StoreProtocol.pinnedFpp(store.meta))
       }
     }
     if (!bm25IsFlat(spark, dir))
@@ -679,12 +671,10 @@ object RetrievePipeline {
 
   private def forgetImpl(spark: SparkSession, dir: String,
                          docIds: DataFrame): Long = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath),
+    val store = StoreProtocol.open(spark, dir, "chunks", "vectors")
+    val fs = store.fs
+    require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")),
       s"RetrievePipeline.forget: no committed build at $dir (meta marker absent)")
-    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/chunks"))
-    StoreProtocol.heal(fs, new org.apache.hadoop.fs.Path(s"$dir/vectors"))
     val chunks = readTable(spark, s"$dir/chunks")
     // renamed join key: the chunk store carries the caller's own doc-id
     // column, and a bare `doc_id` reference would be ambiguous
@@ -703,13 +693,11 @@ object RetrievePipeline {
       "RetrievePipeline.forget: retracting the entire corpus — rebuild instead")
     def swapTable(table: String): Unit = {
       val path = new org.apache.hadoop.fs.Path(s"$dir/$table")
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/${table}__forget")
-      fs.delete(tmp, true)
-      readTable(spark, path.toString)
-        .join(drop, Seq("chunk_id"), "left_anti")
-        .write.mode("overwrite").parquet(tmp.toString)
-      StoreProtocol.swapInto(fs, tmp, path,
-        "RetrievePipeline.forget")
+      StoreProtocol.rewrite(fs, path, "__forget", "RetrievePipeline.forget") { tmp =>
+        readTable(spark, path.toString)
+          .join(drop, Seq("chunk_id"), "left_anti")
+          .write.mode("overwrite").parquet(tmp.toString)
+      }
     }
     // chunks LAST — the drop set derives from them (see the scaladoc's
     // replay-idempotency argument)
@@ -727,7 +715,7 @@ object RetrievePipeline {
     swapTable("chunks")
     val survivors = readTable(spark, s"$dir/chunks")
     writePartBloom(fs, dir, "base", survivors, survivors.count(),
-      StoreProtocol.pinnedFpp(spark.read.parquet(s"$dir/meta")))
+      StoreProtocol.pinnedFpp(store.meta))
     removed
   }
 
@@ -752,9 +740,7 @@ object RetrievePipeline {
     */
   def fetchChunks(spark: SparkSession, dir: String,
                   results: DataFrame, isinCap: Long = 1L << 16): DataFrame = {
-    StoreProtocol.heal(new org.apache.hadoop.fs.Path(s"$dir/chunks")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$dir/chunks"))
+    StoreProtocol.open(spark, dir, "chunks")
     // pin the result before it feeds the count, the id collect/semi-join
     // AND the final join — the caller usually hands the un-materialized
     // hybrid plan, which would otherwise execute once per consumer

@@ -2903,14 +2903,13 @@ ORDER BY doc_id""")
     }
     val gate = s"$base/gate"
     val gateLeg = graft.Par.run {
-      val root = new org.apache.hadoop.fs.Path(gate)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text")
-        .write.parquet(s"$gate/docs/ingest=0_aa")
-      Seq((3L, "z")).toDF("doc_id", "text")
-        .write.parquet(s"$gate/docs/ingest=1_bb")
-      Seq("0_aa", "1_bb").foreach(
-        graft.operators.StoreProtocol.commit(fs, root, _))
+      Seq("0_aa" -> Seq((1L, "x"), (2L, "y")), "1_bb" -> Seq((3L, "z")))
+        .foreach { case (key, rows) =>
+          val proto = graft.operators.StoreProtocol
+          proto.ingest(proto.open(s, gate), Seq("docs"), key) { at =>
+            rows.toDF("doc_id", "text").write.parquet(at("docs"))
+          }
+        }
       graft.streaming.IncrementalStream.compactDecontamCorpus(s, gate)
     }
     graft.Par.awaitAll(spanLeg, graphLeg, gateLeg)

@@ -340,13 +340,10 @@ object IncrementalStream {
         // racing this batch's commit; the in-batch trigger below passes
         // through re-entrantly
         graft.operators.Lease.withLease(sp, outDir, s"decontam:$runKey") {
-          val root = new org.apache.hadoop.fs.Path(outDir)
-          val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-          // a compaction crashed mid-swap parks the whole corpus at
-          // __old — restore it first
-          graft.operators.StoreProtocol.heal(fs, root)
-          val committed: Seq[String] =
-            graft.operators.StoreProtocol.visibleKeys(fs, root)
+          // opening heals a compaction crashed mid-swap (the whole
+          // corpus parked at __old)
+          val store = graft.operators.StoreProtocol.open(sp, outDir)
+          val committed = store.keys
           var pinned = List.empty[DataFrame]
           def pin(df: DataFrame): DataFrame = { pinned ::= df.cache(); df }
           try {
@@ -362,11 +359,11 @@ object IncrementalStream {
                 batch, artifactDir, textCol, idCol, k, minShared, portable)
                 .select(col(idCol))
               val accepted = pin(batch.join(dirty, Seq(idCol), "left_anti"))
-              if (!accepted.isEmpty) {
-                val key = batchKey(accepted, batchId, idCol)
-                accepted.write.mode("overwrite").parquet(s"$outDir/docs/ingest=$key")
-                graft.operators.StoreProtocol.commit(fs, root, key)
-              }
+              if (!accepted.isEmpty)
+                graft.operators.StoreProtocol.ingest(store, Seq("docs"),
+                    batchKey(accepted, batchId, idCol)) { at =>
+                  accepted.write.mode("overwrite").parquet(at("docs"))
+                }
             }
             // schedule OR depth trigger (the spanIngest policy): fold the
             // per-batch docs ingests and build the bucketed gate base once
@@ -381,6 +378,11 @@ object IncrementalStream {
         ()
       }
       .start()
+
+  /** The fuzzy-dedup state's per-ingest tables; they share each
+    * ingest's commit key.
+    */
+  private val FuzzyTables = Seq("docs", "bands", "shingles")
 
   /** Streaming FUZZY dedup ingestion: every micro-batch is near-dup
     * checked against the corpus committed so far through its persisted
@@ -421,16 +423,10 @@ object IncrementalStream {
         // per-batch lease (see decontamIngest) — forgetFuzzyState /
         // compactFuzzyState contending with a live drain refuse loudly
         graft.operators.Lease.withLease(sp, stateDir, s"fuzzy:$runKey") {
-          val hadoopConf = sp.sparkContext.hadoopConfiguration
-          val root = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = root.getFileSystem(hadoopConf)
-          // a forgetFuzzyState crashed mid-swap parks the whole state
-          // at __old — restore it first
-          graft.operators.StoreProtocol.heal(fs, root)
-          val committed: Seq[String] =
-            graft.operators.StoreProtocol.visibleKeys(fs, root)
-          def partDirs(table: String): Seq[String] =
-            committed.map(key => s"$stateDir/$table/ingest=$key")
+          // opening heals a forgetFuzzyState crashed mid-swap (the
+          // whole state parked at __old)
+          val store = graft.operators.StoreProtocol.open(sp, stateDir)
+          val committed = store.keys
           // this batch's OWN pinned frames, released in finally — scoped
           // cleanup, NOT catalog.clearCache(): an embedding application's
           // unrelated caches in the same session must survive each batch
@@ -453,8 +449,7 @@ object IncrementalStream {
                 if (committed.nonEmpty)
                   graft.operators.Dedup.minhashLshIncrementalFromState(
                     bBands, bSh,
-                    sp.read.parquet(partDirs("bands"): _*),
-                    sp.read.parquet(partDirs("shingles"): _*),
+                    store.read("bands"), store.read("shingles"),
                     idCol, threshold)
                 else
                   graft.operators.Dedup.verifyJaccard(
@@ -474,18 +469,18 @@ object IncrementalStream {
               val accepted = pin(batch
                 .join(corpusHit.union(internalDrop).distinct(), Seq(idCol), "left_anti"))
               if (!accepted.isEmpty) {
-                val key = batchKey(accepted, batchId, idCol)
                 val acceptedIds = accepted.select(col(idCol))
                 def acceptedOnly(df: DataFrame) =
                   df.join(acceptedIds, Seq(idCol), "left_semi")
-                acceptedOnly(bBands).write.mode("overwrite")
-                  .parquet(s"$stateDir/bands/ingest=$key")
-                // normalize to (id, shingle): dropHotKeys' USING join emits
-                // (shingle, id), and the state table is a public contract
-                acceptedOnly(bSh).select(col(idCol), col("shingle"))
-                  .write.mode("overwrite").parquet(s"$stateDir/shingles/ingest=$key")
-                accepted.write.mode("overwrite").parquet(s"$stateDir/docs/ingest=$key")
-                graft.operators.StoreProtocol.commit(fs, root, key)
+                graft.operators.StoreProtocol.ingest(store, FuzzyTables,
+                    batchKey(accepted, batchId, idCol)) { at =>
+                  acceptedOnly(bBands).write.mode("overwrite").parquet(at("bands"))
+                  // normalize to (id, shingle): dropHotKeys' USING join emits
+                  // (shingle, id), and the state table is a public contract
+                  acceptedOnly(bSh).select(col(idCol), col("shingle"))
+                    .write.mode("overwrite").parquet(at("shingles"))
+                  accepted.write.mode("overwrite").parquet(at("docs"))
+                }
               }
             }
             // schedule OR depth trigger (the spanIngest policy)
@@ -647,7 +642,7 @@ object IncrementalStream {
         "re-compact the store (compactDecontamCorpus/compactFuzzyState) " +
         "rather than guessing the base's modulus")
     graft.operators.StoreProtocol
-      .pinnedLsmBuckets(sp.read.parquet(m.toString))
+      .pinnedLsmBuckets(sp.read.parquet(m.toString).head())
   }
 
   /** The exact committed-id count `gate_meta` carries for the read
@@ -693,27 +688,23 @@ object IncrementalStream {
                                    tables: Seq[String], idCol: String,
                                    maxGens: Int): (Int, Int) = {
     val proto = graft.operators.StoreProtocol
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    proto.heal(fs, root)
-    proto.sweepSuperseded(fs, root, tables :+ "gate_ids")
-    val visible = proto.visibleKeys(fs, root)
-    val before = visible.length
+    val store = proto.open(sp, dir)
+    val fs = store.fs
+    proto.sweepSuperseded(fs, store.root, tables :+ "gate_ids")
+    val before = store.keys.length
     if (before == 0) return (0, 0)
-    val plan = proto.planFold(fs, s"$dir/gate_ids", visible, maxGens,
+    val plan = proto.planFold(fs, s"$dir/gate_ids", store.keys, maxGens,
       "retained_")
     if (!plan.due) return (before, before)
     import plan.{flat, folded, gens, key, retired}
     val buckets =
       if (gens.isEmpty) proto.WideLsmBuckets else gateBucketsOf(sp, fs, dir)
     tables.foreach { t =>
-      sp.read.parquet(retired.map(k => s"$dir/$t/ingest=$k"): _*)
-        .write.mode("overwrite").parquet(s"$dir/$t/ingest=$key")
+      store.read(t, retired).write.mode("overwrite").parquet(store.ingestDir(t, key))
     }
     val tailIds =
       if (flat.isEmpty) None
-      else Some(sp.read
-        .parquet(flat.map(k => s"$dir/docs/ingest=$k"): _*)
+      else Some(store.read("docs", flat)
         .select(col(idCol)).distinct().localCheckpoint(true))
     // the folded small generations read WHOLE (they are the fold's own
     // cost, chosen smallest-first); live generations are never opened —
@@ -727,11 +718,11 @@ object IncrementalStream {
       case Nil =>
         // unreachable for a store with committed docs; typed off the
         // just-written fold so the write below still lands a schema
-        sp.read.parquet(s"$dir/docs/ingest=$key").select(col(idCol)).limit(0)
+        sp.read.parquet(store.ingestDir("docs", key)).select(col(idCol)).limit(0)
       case pieces => pieces.reduce(_.unionByName(_)).distinct()
     }
     proto.writeLsmBaseBy(ids, gateBucketExpr(col(idCol), buckets),
-      s"$dir/gate_ids/ingest=$key", buckets)
+      store.ingestDir("gate_ids", key), buckets)
     val tailCount = tailIds.map(_.count()).getOrElse(0L)
     val total = gateMetaIdCount(sp, fs, dir) match {
       case Some(prev) => prev + tailCount
@@ -741,7 +732,7 @@ object IncrementalStream {
           touched = None, buckets).count() + tailCount
     }
     writeGateMeta(sp, dir, buckets, total)
-    proto.commitIncremental(fs, root, tables :+ "gate_ids", key, retired)
+    proto.commitIncremental(fs, store.root, tables :+ "gate_ids", key, retired)
     (before, plan.live.length + 1)
   }
 
@@ -752,15 +743,13 @@ object IncrementalStream {
     * r14 review). The meta records the exact surviving id count for the
     * read policy.
     */
-  private def writeGateBase(sp: SparkSession,
-                            fs: org.apache.hadoop.fs.FileSystem,
-                            stagingDir: String, key: String,
-                            docs: DataFrame, idCol: String): Unit = {
+  private def writeGateBase(sp: SparkSession, base: String,
+                            stagingDir: String, docs: DataFrame,
+                            idCol: String): Unit = {
     val buckets = graft.operators.StoreProtocol.WideLsmBuckets
     val ids = docs.select(col(idCol)).distinct().localCheckpoint(true)
     graft.operators.StoreProtocol.writeLsmBaseBy(
-      ids, gateBucketExpr(col(idCol), buckets),
-      s"$stagingDir/gate_ids/ingest=$key", buckets)
+      ids, gateBucketExpr(col(idCol), buckets), base, buckets)
     writeGateMeta(sp, stagingDir, buckets, ids.count())
   }
 
@@ -800,8 +789,7 @@ object IncrementalStream {
                         maxGens: Int =
                           graft.operators.StoreProtocol.MaxBaseGens): (Int, Int) =
     graft.operators.Lease.withLease(spark, stateDir, "compactFuzzyState") {
-      consolidateGateStore(spark, stateDir,
-        Seq("docs", "bands", "shingles"), idCol, maxGens)
+      consolidateGateStore(spark, stateDir, FuzzyTables, idCol, maxGens)
     }
 
   /** The audit tables' run identity: the stream's checkpoint location,
@@ -839,11 +827,9 @@ object IncrementalStream {
     */
   private def uncompactedIngests(sp: SparkSession, storeDir: String,
                                  table: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    val keys = graft.operators.StoreProtocol.visibleKeys(fs, root)
+    val store = graft.operators.StoreProtocol.open(sp, storeDir)
     graft.operators.StoreProtocol
-      .splitLsmLayout(fs, s"$storeDir/$table", keys)._2.length
+      .splitLsmLayout(store.fs, s"$storeDir/$table", store.keys)._2.length
   }
 
   /** Retraction from the persisted fuzzy-dedup state
@@ -880,17 +866,13 @@ object IncrementalStream {
     // from under a mid-flight batch); retractionIngest's own leased()
     // wrapper passes through re-entrantly
     graft.operators.Lease.withLease(spark, stateDir, "forgetFuzzyState") {
-      val root = new org.apache.hadoop.fs.Path(stateDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.operators.StoreProtocol.heal(fs, root)
-      val committed = graft.operators.StoreProtocol.visibleKeys(fs, root)
-      def readState(table: String) = spark.read.parquet(
-        committed.map(key => s"$stateDir/$table/ingest=$key"): _*)
+      val proto = graft.operators.StoreProtocol
+      val store = proto.open(spark, stateDir)
       // expression form, not early returns — a non-local return from a
       // withLease closure unwinds by exception
-      if (committed.isEmpty) 0L
+      if (store.isEmpty) 0L
       else {
-        val docs = readState("docs")
+        val docs = store.read("docs")
         // cast to the STATE's key type: a string feed against long ids
         // would otherwise coerce both join sides to double and lose
         // exactness above 2^53
@@ -899,38 +881,33 @@ object IncrementalStream {
         val removed = docs.join(keys, Seq(idCol), "left_semi").count()
         if (removed == 0L) 0L
         else {
-        val tmp = new org.apache.hadoop.fs.Path(stateDir + "__forget")
-        fs.delete(tmp, true)
-        val survivors = removed < docs.count()
-        if (survivors) {
-          // monotone generation + content hash: two successive rebuilds
-          // can never reuse one key (r14 advice — the old retained_<count>
-          // repeated after fold/grow/fold cycles)
-          val proto = graft.operators.StoreProtocol
-          val retainedKey = proto.ingestKey("retained_",
-            proto.nextGen(committed), proto.keyHash(committed))
-          Seq("docs", "bands", "shingles").foreach { table =>
-            readState(table).join(keys, Seq(idCol), "left_anti")
-              .write.mode("overwrite")
-              .parquet(s"$tmp/$table/ingest=$retainedKey")
+          val survivors = removed < docs.count()
+          proto.rewrite(store.fs, store.root, "__forget", "forgetFuzzyState") { tmp =>
+            if (survivors)
+              // monotone generation + content hash: two successive rebuilds
+              // can never reuse one key (r14 advice — the old
+              // retained_<count> repeated after fold/grow/fold cycles)
+              proto.ingest(store.emptyAt(tmp), FuzzyTables,
+                  store.nextKey("retained_", proto.keyHash(store.keys))) { at =>
+                FuzzyTables.foreach { table =>
+                  store.read(table).join(keys, Seq(idCol), "left_anti")
+                    .write.mode("overwrite").parquet(at(table))
+                }
+                // the rebuild must CARRY the bucketed gate base forward
+                // (r14 review): the swap replaces the whole directory, and
+                // a retained ingest without gate_ids reads as flat — one
+                // retraction would silently reinstate the scattered-id
+                // full scan for every later batch until the depth trigger
+                // re-compacts
+                writeGateBase(spark, at("gate_ids"), tmp.toString,
+                  spark.read.parquet(at("docs")), idCol)
+              }
+            else
+              // everything retracted: an empty state (no markers) —
+              // readers treat it exactly like a fresh stateDir
+              store.fs.mkdirs(tmp)
           }
-          // the rebuild must CARRY the bucketed gate base forward (r14
-          // review): the swap replaces the whole directory, and a
-          // retained ingest without gate_ids reads as flat — one
-          // retraction would silently reinstate the scattered-id full
-          // scan for every later batch until the depth trigger
-          // re-compacts
-          writeGateBase(spark, fs, tmp.toString, retainedKey,
-            spark.read.parquet(s"$tmp/docs/ingest=$retainedKey"), idCol)
-          proto.commit(fs, tmp, retainedKey)
-        } else {
-          // everything retracted: an empty state (no markers) — readers
-          // treat it exactly like a fresh stateDir
-          fs.mkdirs(tmp)
-        }
-        graft.operators.StoreProtocol.swapInto(fs, tmp, root,
-          "forgetFuzzyState")
-        removed
+          removed
         }
       }
     }

@@ -152,7 +152,7 @@ class GraphStoreSpec extends SparkSpec {
     GraphStore.append(spark, dir, Seq((1L, 2L), (10L, 11L)).toDF("a", "b"),
       lsmBuckets = 8)
     def metaBuckets() = graft.operators.StoreProtocol
-      .pinnedLsmBuckets(spark.read.parquet(s"$dir/meta"))
+      .pinnedLsmBuckets(spark.read.parquet(s"$dir/meta").head())
     assert(metaBuckets() == 8)
     // a later append asking for a different count is ignored — the
     // store's recorded layout is authoritative (no silent re-moduling)

@@ -6,9 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The marker protocol's write half has one home, `StoreProtocol`: no other
-  * engine source mints an ingest content hash, names the commit-marker
-  * directory or selects a tier fold by hand. Scans the sources; no session.
+/** The store protocol has one home, `StoreProtocol`: no other engine
+  * source mints an ingest content hash, names the commit-marker
+  * directory or selects a tier fold by hand, and none strings the
+  * lifecycle together itself — heal, key listing, orphan sweep and swap
+  * run only behind `open`, `ingest` and `rewrite`. Scans the sources;
+  * no session.
   */
 class ProtocolSeamSpec extends AnyFunSuite {
 
@@ -52,4 +55,12 @@ class ProtocolSeamSpec extends AnyFunSuite {
     val sites = sitesOf("tierFoldSelection(")
     assert(sites.isEmpty, sites.mkString("\n"))
   }
+
+  // the lifecycle steps `open`, `ingest` and `rewrite` own
+  for (needle <- Seq("heal(", "visibleKeys(", "committedKeys(", "swapInto(",
+      "sweepUnmarked(", "private def fsOf"))
+    test(s"no $needle outside StoreProtocol") {
+      val sites = sitesOf(needle)
+      assert(sites.isEmpty, sites.mkString("\n"))
+    }
 }

@@ -137,7 +137,7 @@ class SpanStoreSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def metaBuckets() = graft.operators.StoreProtocol
-      .pinnedLsmBuckets(spark.read.parquet(s"$dir/meta"))
+      .pinnedLsmBuckets(spark.read.parquet(s"$dir/meta").head())
     def maxBucketDir() = fs
       .listStatus(new org.apache.hadoop.fs.Path(s"$dir/span_docs"))
       .filter(_.getPath.getName.startsWith("ingest="))

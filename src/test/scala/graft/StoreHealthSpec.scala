@@ -39,6 +39,27 @@ class StoreHealthSpec extends SparkSpec {
     assert(clean.isNullAt(clean.fieldIndex("lease_risk_holder")))
   }
 
+  test("a store parked mid-swap (dir absent, dir__old present) reads as " +
+    "its unparked self, and the scan leaves it parked") {
+    val dir = tmp() + "/store"
+    SpanStore.append(spark, dir,
+      Seq((1L, "a1 a2 a3 a4 a5 a6 a7 a8")).toDF("doc_id", "text"),
+      "text", "doc_id", k = 8)
+    SpanStore.append(spark, dir,
+      Seq((2L, "b1 b2 b3 b4 b5 b6 b7 b8")).toDF("doc_id", "text"),
+      "text", "doc_id", k = 8)
+    val live = StoreHealth.scan(spark, Seq(("s", dir))).head()
+    assert(live.getAs[Int]("committed_ingests") == 2)
+    // the state a crash between swapInto's two renames leaves
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val old = new org.apache.hadoop.fs.Path(dir + "__old")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(root, old))
+    assert(StoreHealth.scan(spark, Seq(("s", dir))).head() == live)
+    assert(!fs.exists(root) && fs.exists(old),
+      "the datasheet must not heal: a live writer may be mid-swap")
+  }
+
   test("a not-yet-built lane renders as an empty row (a takedown feed " +
     "can outrun the first build); an interrupted fold's pending note " +
     "is counted") {
